@@ -29,6 +29,7 @@ from typing import Callable, Iterable, Mapping, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from crypto_price_tracker_with_etl_dashboard_spark.operators.dashboard import (
     distinct_symbols,
@@ -57,12 +58,25 @@ class PriceTracker:
     def __init__(self, spark: SparkSession, table: str | DataFrame):
         self.spark = spark
         self._table = table
+        self._schema: Optional[StructType] = None
 
     @property
     def prices(self) -> DataFrame:
+        """The prices table as it stands now.
+
+        A path-backed table's schema is resolved once per tracker, on
+        the first deref that succeeds, and reused: every write path
+        (``ingest_batch``, the streaming sinks) writes the same
+        (dt, batch) + event_id layout, so it cannot change.  Files are
+        listed on every deref, so batches appended since are visible.
+        """
         if isinstance(self._table, DataFrame):
             return self._table
-        return self.spark.read.parquet(self._table)
+        if self._schema is None:
+            # Racing first derefs each resolve the same schema; either
+            # store is correct.
+            self._schema = self.spark.read.parquet(self._table).schema
+        return self.spark.read.schema(self._schema).parquet(self._table)
 
     # ---- write path (ETL tier) -------------------------------------------
 
@@ -143,7 +157,7 @@ class PriceTracker:
     def ohlc(self, window: str = "5 minutes") -> DataFrame:
         """Per-symbol tumbling OHLC candles over the price history."""
         # bind once: each `self.prices` deref on a path-backed table
-        # re-runs driver-side file listing + schema resolution
+        # lists the table's files again
         prices = self.prices
         tiebreak = "event_id" if "event_id" in prices.columns else None
         return ohlc_candles(prices, window=window, tiebreak_col=tiebreak)

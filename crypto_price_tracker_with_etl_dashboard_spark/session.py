@@ -3,7 +3,11 @@
 run would be: UTC session time zone (oracle parity), AQE on
 (runtime re-planning, skew-join splitting, partition coalescing),
 shuffle partitions ~ cores locally (on a real cluster this is set to
-2-3x total cores or left to AQE's coalescing).
+2-3x total cores or left to AQE's coalescing).  The factory's session
+is always ``local[N]``, so it lists table directories on the driver at
+any directory count: a parallel listing job would run its tasks in the
+same JVM and add only scheduling (``tune_session`` leaves an external
+cluster session's distributed listing alone).
 """
 
 from __future__ import annotations
@@ -27,6 +31,8 @@ def get_spark(app_name: str = "crypto-etl-spark", shuffle_partitions: int | None
         # Oracle parity: DuckDB timestamps are UTC-naive.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # Table directories are listed on the driver: see the module docstring.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
         # Adaptive execution: coalesce small shuffle partitions, split
         # skewed ones, demote/promote join strategies at runtime.
         .config("spark.sql.adaptive.enabled", "true")
