@@ -75,8 +75,9 @@ def market_share(snapshot: DataFrame, k: int = 7) -> DataFrame:
 
 def distinct_symbols(prices: DataFrame) -> DataFrame:
     """Unique symbols, lexicographically sorted (the dropdown,
-    frontend/src/App.js:569-570)."""
-    return prices.select("symbol").distinct().orderBy("symbol")
+    frontend/src/App.js:569-570).  At most one row per symbol, so the
+    sort runs in one partition; the distinct keeps its hash shuffle."""
+    return prices.select("symbol").distinct().repartition(1).orderBy("symbol")
 
 
 def _fixed4_display(c: str) -> F.Column:

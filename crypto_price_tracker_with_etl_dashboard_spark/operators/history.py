@@ -3,10 +3,14 @@ api/server.js:90-143): equality predicate on symbol, optional
 inclusive start bound, optional EXCLUSIVE start-of-next-day upper
 bound (api/server.js:113-124), chronological order.
 
-Scale notes: with the prices table partitioned by ``days(timestamp)``
-both bounds become partition-pruning predicates and the symbol
-equality is pushed to parquet row-group stats — a 30-day slice of one
-symbol touches 30 partitions regardless of total table size.
+Scale notes: every write path partitions the prices table by
+``dt = to_date(timestamp)``, so each timestamp bound also implies a
+``dt`` bound, which prunes partitions; the symbol equality is pushed
+to parquet row-group stats.  A 30-day slice of one symbol touches 32
+days of partitions regardless of total table size.  The result is one
+symbol's slice and the API collects it to the driver anyway, so it is
+sorted in one partition: no range-partitioned exchange and no sampling
+job re-running the scan.
 """
 
 from __future__ import annotations
@@ -49,21 +53,41 @@ def history_slice(
     date string would cast to NULL, the bound predicate would
     evaluate NULL on every row, and the API would return a
     plausible-looking EMPTY history with no error (the reference's
-    PG query raises on an invalid date)."""
+    PG query raises on an invalid date).
+
+    When ``prices`` has the ``dt`` partition column, each bound also
+    filters ``dt`` so the scan prunes partitions.  ``dt`` is the date
+    in the writing session's time zone, while the bounds are midnights
+    in the calling process's zone, so a row's ``dt`` can be a day off
+    its date here.  The ``dt`` bounds are therefore one day wider on
+    each side: no row is lost while the two zones' offsets differ by
+    at most 24 h, which every pair of zones except UTC+13/+14 against
+    UTC-11/-12 meets.  The ``timestamp`` predicates stay the exact
+    filter."""
+    prune = "dt" in prices.columns
+    day = dt.timedelta(days=1)
     out = prices.filter(F.col("symbol") == F.lower(F.lit(symbol)))
     if start_date is not None:
         start = _parse_bound(start_date, "start_date")
         if not isinstance(start, dt.datetime):
             start = dt.datetime.combine(start, dt.time.min)
         out = out.filter(F.col("timestamp") >= F.lit(start))
+        if prune:
+            out = out.filter(F.col("dt") >= F.lit(start.date() - day))
     if end_date is not None:
         end = _parse_bound(end_date, "end_date")
         next_day = dt.datetime.combine(
-            (end.date() if isinstance(end, dt.datetime) else end)
-            + dt.timedelta(days=1),
+            (end.date() if isinstance(end, dt.datetime) else end) + day,
             dt.time.min,
         )
         out = out.filter(F.col("timestamp") < F.lit(next_day))
-    return out.select(
-        "symbol", "name", "current_price", "market_cap", "total_volume", "timestamp"
-    ).orderBy(F.col("timestamp").asc())
+        if prune:
+            out = out.filter(F.col("dt") <= F.lit(next_day.date()))
+    # One symbol's slice, collected by the caller: one partition sorts it.
+    return (
+        out.select(
+            "symbol", "name", "current_price", "market_cap", "total_volume", "timestamp"
+        )
+        .repartition(1)
+        .orderBy(F.col("timestamp").asc())
+    )

@@ -11,6 +11,9 @@ window ``row_number``, a single shuffle on the series key.  At 100 TB
 this is the right plan: one hash-partition exchange on ``symbol``,
 per-partition sort, no join at all; the output is <= |symbols| rows
 (broadcast-sized) so anything downstream joins against it for free.
+The cap ordering sorts those rows in one partition: a single-partition
+exchange feeds the sort, so there is no range-partitioned exchange and
+no sampling job re-running the window stage.
 The reference's tie-on-batch-timestamp semantics (etl/crypto_etl.py:82)
 are resolved deterministically by a caller-supplied total-order
 tiebreaker instead of the reference's arrival-order Map.set.
@@ -42,5 +45,7 @@ def latest_snapshot(
     if order_by_cap:
         # PostgreSQL ORDER BY ... DESC places NULLs first (api/server.js:76);
         # Spark's desc() places them last — desc_nulls_first for parity.
-        out = out.orderBy(F.col("market_cap").desc_nulls_first())
+        # At most one row per symbol, so one partition sorts it;
+        # repartition (not coalesce) keeps the window stage parallel.
+        out = out.repartition(1).orderBy(F.col("market_cap").desc_nulls_first())
     return out

@@ -136,7 +136,7 @@ class _IncrementalSnapshot:
     size.
 
     Correctness: within a batch, ties on the batch-constant timestamp
-    are resolved by ``snapshot_for_push`` over the batch itself (same
+    are resolved by ``latest_snapshot`` over the batch itself (same
     event_id tiebreak as a full recompute); across batches timestamps
     strictly increase, so newest-timestamp-wins merging reproduces
     the full-table latest_snapshot exactly."""
@@ -158,17 +158,23 @@ class _IncrementalSnapshot:
             key=lambda r: (r["market_cap"] is not None, -(r["market_cap"] or 0.0)),
         )
 
+    @staticmethod
+    def _latest_rows(prices: DataFrame) -> list:
+        return latest_snapshot(prices, tiebreaker="event_id", order_by_cap=False).collect()
+
     def merge(self, spark: SparkSession, table_path: str, batch_clean: DataFrame) -> list:
         """Fold one written batch into the snapshot; returns the rows
-        to push (cap-descending, NULLs first)."""
+        to push (cap-descending, NULLs first).  Spark computes the
+        unordered snapshot rows; the driver orders every push, seed
+        and warm alike, with ``_cap_order``."""
         if self.rows is None:
             # cold start / restart: one full read seeds state (the
             # just-written batch is already in the table)
             self.full_reads += 1
-            self.rows = snapshot_for_push(spark.read.parquet(table_path)).collect()
+            self.rows = self._cap_order(self._latest_rows(spark.read.parquet(table_path)))
             return self.rows
         by_symbol = {r["symbol"]: r for r in self.rows}
-        for r in snapshot_for_push(batch_clean).collect():
+        for r in self._latest_rows(batch_clean):
             prev = by_symbol.get(r["symbol"])
             if prev is None or r["timestamp"] >= prev["timestamp"]:
                 by_symbol[r["symbol"]] = r

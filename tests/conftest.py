@@ -20,6 +20,21 @@ def spark():
     yield s
 
 
+def jobs_run(spark, group: str, fn):
+    """``fn()`` and the number of Spark jobs it started, counted by
+    tagging them with a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def ts(s: str) -> dt.datetime:
     return dt.datetime.fromisoformat(s)
 

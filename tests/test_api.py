@@ -7,6 +7,7 @@ from __future__ import annotations
 import datetime as dt
 
 from crypto_price_tracker_with_etl_dashboard_spark.api import PriceTracker
+from tests.conftest import jobs_run
 
 BATCH1 = [
     {"symbol": "BTC", "name": "Bitcoin", "current_price": 100.0,
@@ -83,26 +84,12 @@ def test_api_indicator_extensions(spark, prices_fixture):
     assert all(r["macd"] == 0.0 for r in em if r["rn"] == 1)
 
 
-def _jobs_run(spark, group: str, fn):
-    """``fn()`` and the number of Spark jobs it started, counted by
-    tagging them with a job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # job-start events reach the status tracker through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_warm_prices_deref_runs_no_spark_job(spark, tmp_path):
     """More batch directories than Spark's default 32-path
     parallel-discovery threshold: the factory session still lists them
     on the driver and the tracker reuses its resolved schema, so a warm
-    open runs no listing or schema-inference job."""
+    open runs no listing or schema-inference job.  The bounded reads
+    sort in one partition, so none of them runs a range-sampling job."""
     from pyspark.sql import functions as F
 
     table = str(tmp_path / "prices")
@@ -127,15 +114,23 @@ def test_warm_prices_deref_runs_no_spark_job(spark, tmp_path):
     )
 
     app = PriceTracker(spark, table)
-    _jobs_run(spark, "api-prices-cold", lambda: app.prices)
-    warm, jobs = _jobs_run(spark, "api-prices-warm", lambda: app.prices)
+    jobs_run(spark, "api-prices-cold", lambda: app.prices)
+    warm, jobs = jobs_run(spark, "api-prices-warm", lambda: app.prices)
     assert jobs == 0
     assert len(warm.inputFiles()) == n_batches  # every batch= directory listed
-    latest, jobs = _jobs_run(spark, "api-latest-warm", lambda: app.latest().collect())
-    assert jobs == 4
+    latest, jobs = jobs_run(spark, "api-latest-warm", lambda: app.latest().collect())
+    assert jobs == 3  # window shuffle map, single-partition shuffle map, result
     assert [(r["symbol"], r["current_price"]) for r in latest] == [
         ("c2", 120.0), ("c1", 119.0), ("c0", 118.0)
     ]
+    jobs_run(spark, "api-history-cold", lambda: app.history("c1").collect())
+    hist, jobs = jobs_run(spark, "api-history-warm", lambda: app.history("c1").collect())
+    assert jobs == 2  # single-partition shuffle map, result
+    assert [r["current_price"] for r in hist] == [float(3 * b + 2) for b in range(n_batches)]
+    jobs_run(spark, "api-symbols-cold", lambda: app.symbols().collect())
+    syms, jobs = jobs_run(spark, "api-symbols-warm", lambda: app.symbols().collect())
+    assert jobs == 3  # distinct shuffle map, single-partition shuffle map, result
+    assert [r["symbol"] for r in syms] == ["c0", "c1", "c2"]
 
 
 def test_prices_sees_batches_appended_after_schema_resolved(spark, tmp_path):

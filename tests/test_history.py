@@ -42,3 +42,74 @@ def test_history_rejects_malformed_dates(prices_fixture):
         history_slice(prices_fixture, "btc", start_date="05/01/2024")
     with pytest.raises(ValueError, match="end_date"):
         history_slice(prices_fixture, "btc", end_date="not-a-date")
+
+
+def _scans(plan) -> list:
+    """FileSourceScanExec nodes of an executed plan, looking through
+    adaptive query stages."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _scans(plan.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _scans(plan.plan())
+    if name == "FileSourceScanExec":
+        return [plan]
+    kids = plan.children()
+    return [s for i in range(kids.size()) for s in _scans(kids.apply(i))]
+
+
+def test_history_prunes_dt_partitions(spark, tmp_path):
+    """The timestamp bounds imply dt bounds, so a one-day history reads
+    only that day's files and still returns the unpruned answer."""
+    import datetime as dt
+    import glob
+
+    from crypto_price_tracker_with_etl_dashboard_spark.api import PriceTracker
+
+    table = str(tmp_path / "prices")
+    app = PriceTracker(spark, table)
+    for day in (1, 3, 5):
+        for hour in (0, 23):
+            app.ingest_batch(
+                [{"symbol": "BTC", "name": "Bitcoin", "current_price": 100.0 * day + hour,
+                  "market_cap": 1e9, "total_volume": 1e6}],
+                batch_ts=dt.datetime(2024, 1, day, hour),
+            )
+
+    hist = app.history("btc", "2024-01-03", "2024-01-03")
+    rows = hist.collect()
+    assert [r["current_price"] for r in rows] == [300.0, 323.0]
+    unpruned = history_slice(app.prices.drop("dt"), "btc", "2024-01-03", "2024-01-03")
+    assert rows == unpruned.collect()
+
+    (scan,) = _scans(hist._jdf.queryExecution().executedPlan())
+    assert "PartitionFilters: []" not in scan.toString()
+    day_files = glob.glob(f"{table}/dt=2024-01-03/*/*.parquet")
+    assert len(day_files) < len(glob.glob(f"{table}/*/*/*.parquet"))
+    assert scan.metrics().apply("numFiles").value() == len(day_files)
+
+
+def test_history_dt_bounds_keep_rows_from_other_time_zones(spark, tmp_path):
+    """dt is the date in the writing session's zone, the bounds are
+    midnights in the caller's: a row whose dt is one day after (or
+    before) its date in the caller's zone is still returned."""
+    import datetime as dt
+
+    from crypto_price_tracker_with_etl_dashboard_spark.api import PriceTracker
+    from pyspark.sql.types import DateType, StructField, StructType
+
+    from crypto_price_tracker_with_etl_dashboard_spark.schema import PRICES_SCHEMA
+
+    table = str(tmp_path / "prices")
+    rows = [
+        # writer ahead of the caller: Jan 2 20:00 here, already Jan 3 there
+        ("btc", "Bitcoin", 1.0, 1e9, 1e6, dt.datetime(2024, 1, 2, 20), dt.date(2024, 1, 3)),
+        # writer behind the caller: Jan 3 04:00 here, still Jan 2 there
+        ("btc", "Bitcoin", 2.0, 1e9, 1e6, dt.datetime(2024, 1, 3, 4), dt.date(2024, 1, 2)),
+    ]
+    schema = StructType(PRICES_SCHEMA.fields + [StructField("dt", DateType())])
+    spark.createDataFrame(rows, schema).write.partitionBy("dt").parquet(table)
+
+    app = PriceTracker(spark, table)
+    for day, price in (("2024-01-02", 1.0), ("2024-01-03", 2.0)):
+        assert [r["current_price"] for r in app.history("btc", day, day).collect()] == [price]

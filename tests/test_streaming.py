@@ -95,6 +95,65 @@ def test_snapshot_push_is_incremental(spark, tmp_path):
     assert [r["symbol"] for r in rows] == ["btc", "sol"]  # cap desc
 
 
+def test_push_merge_orders_on_driver(spark, tmp_path):
+    """The push path computes unordered snapshot rows in Spark and
+    orders them on the driver: a seed merge runs schema inference plus
+    the window's two jobs, a warm merge only the window's two, and no
+    merge runs a range-sort job.  The rows come out cap-descending with
+    NULLs first and equal a full recompute as a multiset."""
+    import datetime as dt
+    from collections import Counter
+
+    from crypto_price_tracker_with_etl_dashboard_spark.schema import PRICES_SCHEMA
+    from crypto_price_tracker_with_etl_dashboard_spark.streaming.pipeline import (
+        _IncrementalSnapshot,
+        snapshot_for_push,
+    )
+    from tests.conftest import jobs_run
+
+    table = str(tmp_path / "prices")
+    t0 = dt.datetime(2024, 1, 1, 0, 0)
+    t1 = t0 + dt.timedelta(minutes=5)
+
+    def batch(rows, batch_id):
+        return (
+            spark.createDataFrame(rows, PRICES_SCHEMA)
+            .withColumn("event_id", F.monotonically_increasing_id())
+            .withColumn("dt", F.to_date("timestamp"))
+            .withColumn("batch", F.lit(batch_id))
+        )
+
+    def write(df):
+        df.write.mode("append").partitionBy("dt", "batch").parquet(table)
+
+    first = batch([
+        ("btc", "Bitcoin", 100.0, 1e9, 1e6, t0),
+        ("eth", "Ethereum", 50.0, 5e8, 1e5, t0),
+        ("doge", "Dogecoin", 1.0, None, 5.0, t0),
+        ("zero", "ZeroCap", 2.0, 0.0, 1.0, t0),
+    ], 0)
+    write(first)
+    state = _IncrementalSnapshot()
+    seed, jobs = jobs_run(spark, "push-seed", lambda: state.merge(spark, table, first))
+    assert jobs == 3
+    assert [r["market_cap"] for r in seed] == [None, 1e9, 5e8, 0.0]
+    assert Counter(seed) == Counter(snapshot_for_push(spark.read.parquet(table)).collect())
+
+    second = batch([
+        ("eth", "Ethereum", 55.0, 2e9, 1e5, t1),
+        ("eth", "Ethereum", 56.0, 3e9, 1e5, t1),  # same-tick tie: later event wins
+        ("zero", "ZeroCap", 2.2, 0.0, 1.0, t1),
+        ("sol", "Solana", 20.0, None, 5e4, t1),
+    ], 1)
+    write(second)
+    warm, jobs = jobs_run(spark, "push-warm", lambda: state.merge(spark, table, second))
+    assert jobs == 2
+    assert state.full_reads == 1
+    caps = [r["market_cap"] for r in warm]
+    assert caps[:2] == [None, None] and caps[2:] == [3e9, 1e9, 0.0]
+    assert Counter(warm) == Counter(snapshot_for_push(spark.read.parquet(table)).collect())
+
+
 def test_multi_batch_push_within_one_run(spark, tmp_path):
     """Two raw files -> two micro-batches in ONE stream run: the
     second push exercises the warm incremental merge (no reseed) and
