@@ -22,6 +22,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crypto_price_tracker_with_etl_dashboard_spark.functions.text import fingerprint, tokens
+from crypto_price_tracker_with_etl_dashboard_spark.operators._session_cache import (
+    session_plan_cache,
+)
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -171,7 +174,7 @@ def _ngram_pair_counts(
     # The pair JOIN below stays per-consumer — deliberately: caching
     # the joined counts would serve near-complete query results from
     # the cache, which is memoization, not sharing.
-    sized = _session_plan_cache(_NGRAM_COUNTS_CACHE, sized)
+    sized = session_plan_cache(sized)
     a = sized.select(
         "__blk", "__shingle",
         F.col("__id").alias("doc_a"), F.col("__n").alias("__n_a"),
@@ -295,46 +298,6 @@ def minhash_signature(hashed: Column, num_hashes: int = 16) -> Column:
     )
 
 
-# Last cached banded-signature DataFrame per Spark application (see
-# the eviction comment inside minhash_lsh_pairs).  Keyed by
-# applicationId — id(session) values are reused after GC.
-# applicationId -> [(analyzed JVM plan, cached DataFrame)] session
-# caches for the two shared dedup pipeline prefixes (r12
-# optimization, the _EDGE_CACHE discipline): ~10 registered queries
-# run the identical tokenize -> shingle -> minhash -> band pipeline
-# and 3+ run the identical posting-join pair-count core over the
-# same corpus.  Entries are matched by Catalyst's semantic plan
-# comparison (``sameResult``, the exact check Spark's own
-# CacheManager uses), so the second and later queries in one session
-# reuse the one cached table instead of rebuilding it.  Capped per
-# app (oldest unpersisted) so parameter sweeps cannot stack
-# corpus-sized tables; the caches die with the application — nothing
-# persists across bench runs.
-from crypto_price_tracker_with_etl_dashboard_spark.operators._session_cache import (  # noqa: E402
-    session_plan_cache as _plan_cache,
-)
-
-_BANDED_CACHE: dict[str, list[tuple[object, DataFrame]]] = {}
-_NGRAM_COUNTS_CACHE: dict[str, list[tuple[object, DataFrame]]] = {}
-# Capacity covers the distinct (corpus, params) variants the
-# registered queries actually use — ONE banded variant (every
-# minhash_lsh_pairs consumer passes _NUM_HASHES/_BANDS over the same
-# corpus) and ONE sized-posting variant (k=3, _NGRAM_MAX_DF) — plus
-# headroom so three-plus interleaved variants (e.g. an sf-dir switch
-# inside one session, or minhash_lsh_pairs' two-sided consumption of
-# the banded table) can never unpersist/recache corpus-sized tables
-# mid-query (r12 ADVICE).
-_PLAN_CACHE_MAX = 4
-
-
-def _session_plan_cache(
-    cache: dict[str, list[tuple[object, DataFrame]]],
-    df: DataFrame,
-    max_entries: int = _PLAN_CACHE_MAX,
-) -> DataFrame:
-    return _plan_cache(cache, df, max_entries)
-
-
 # Band buckets larger than this never join: a bucket of n docs
 # yields n(n-1)/2 candidate pairs, so one million-way identical-
 # boilerplate cluster (routine in web-scale corpora) would emit
@@ -355,7 +318,7 @@ def _banded_signatures(
     bands: int,
 ) -> DataFrame:
     """The shared LSH banding pipeline: (id, sig, band_idx, band_key)
-    rows, cached with the per-app eviction described inline.  Used by
+    rows, held in the session plan cache.  Used by
     minhash_lsh_pairs (the join) and minhash_lsh_bucket_overflow (the
     observability report)."""
     from crypto_price_tracker_with_etl_dashboard_spark.sources.tables import fan_out
@@ -419,8 +382,10 @@ def _banded_signatures(
     # (Catalyst sameResult — canonicalized, so expression-id drift
     # between invocations doesn't defeat the match).  A call with a
     # different corpus or banding parameters misses and caches its
-    # own entry.
-    return _session_plan_cache(_BANDED_CACHE, banded)
+    # own entry.  ~10 registered queries run this identical pipeline
+    # over the same corpus, so the second and later ones in a session
+    # reuse the one cached table (r12).
+    return session_plan_cache(banded)
 
 
 def minhash_lsh_pairs(

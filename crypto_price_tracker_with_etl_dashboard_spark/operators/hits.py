@@ -55,17 +55,16 @@ from crypto_price_tracker_with_etl_dashboard_spark.operators._broadcast_guard im
     hint_will_fit,
 )
 from crypto_price_tracker_with_etl_dashboard_spark.operators._session_cache import (
+    cached_count,
     session_plan_cache,
 )
 
 UNIT = 10**6
 
-# Session-scoped, sameResult-keyed cache of the HITS build tables
-# (edges, nodes, dual co-located layouts) — the pagerank _PR_CACHE
-# discipline (r13): repeat calls over the same edge expression reuse
-# the builds with zero jobs; the mutual recursion itself always runs.
-_HITS_CACHE: dict[str, list] = {}
-_HITS_MAX_ENTRIES = 8
+# The HITS build tables (edges, nodes, dual co-located layouts) live
+# in the session plan cache, as pagerank's do: repeat calls over the
+# same edge expression reuse the builds with zero jobs; the mutual
+# recursion itself always runs.
 
 
 def _l1_normalize(scores: DataFrame, col: str, unit: int) -> DataFrame:
@@ -103,20 +102,16 @@ def hits(
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     # materialize once before the two-branch node union (count job
-    # only on a cache miss, memoized on the object — r13); 2x the
+    # only on a cache miss, kept in the cache entry — r13); 2x the
     # edge count is the guard's free node bound (see comment below)
-    edges = session_plan_cache(
-        _HITS_CACHE, edges, max_entries=_HITS_MAX_ENTRIES, materialize=True
-    )
-    n_nodes = 2 * edges._graft_count
+    edges = session_plan_cache(edges, materialize=True)
+    n_nodes = 2 * cached_count(edges)
     # lazy entry: the first action's broadcast build populates it,
     # exactly the pre-r13 job structure
     nodes = session_plan_cache(
-        _HITS_CACHE,
         edges.select(F.col(src).alias("node"))
         .unionByName(edges.select(F.col(dst).alias("node")))
-        .distinct(),
-        max_entries=_HITS_MAX_ENTRIES,
+        .distinct()
     )
     # FREE upper bound for the broadcast guard: |nodes| <= 2 * |edges|
     # (each edge names two endpoints), and the edge count was already
@@ -145,22 +140,13 @@ def hits(
         # ones (r13, the same spill-not-OOM argument): a repeat call
         # re-hits every layout instead of rebuilding the raw one.
         edges_by_src = session_plan_cache(
-            _HITS_CACHE,
-            colocate_for_guarded_joins(edges, src),
-            max_entries=_HITS_MAX_ENTRIES,
-            materialize=True,
+            colocate_for_guarded_joins(edges, src), materialize=True
         )
         edges_by_dst = session_plan_cache(
-            _HITS_CACHE,
-            colocate_for_guarded_joins(edges, dst),
-            max_entries=_HITS_MAX_ENTRIES,
-            materialize=True,
+            colocate_for_guarded_joins(edges, dst), materialize=True
         )
         nodes = session_plan_cache(
-            _HITS_CACHE,
-            colocate_for_guarded_joins(nodes, "node"),
-            max_entries=_HITS_MAX_ENTRIES,
-            materialize=True,
+            colocate_for_guarded_joins(nodes, "node"), materialize=True
         )
     else:
         edges_by_src = edges_by_dst = edges

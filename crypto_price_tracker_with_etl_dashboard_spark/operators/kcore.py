@@ -48,23 +48,13 @@ from pyspark.sql import functions as F
 
 from crypto_price_tracker_with_etl_dashboard_spark.operators._broadcast_guard import (
     colocate_for_guarded_joins,
-    evict_stale_app_entries,
     guarded_broadcast,
     hint_will_fit,
 )
 from crypto_price_tracker_with_etl_dashboard_spark.operators._session_cache import (
-    MIRROR_CACHE,
+    hold,
     session_plan_cache,
 )
-
-
-# applicationId -> cached DataFrames from the previous kcore call
-# (the _LPA_CACHE convention): popped and unpersisted on the next
-# call under the SAME application; entries for OTHER application ids
-# are dropped on entry WITHOUT unpersist (their SparkContext is
-# stopped — the JVM cache died with the application, only the Python
-# handles would leak).
-_KCORE_CACHE: dict[str, list] = {}
 
 
 def _degrees(edges: DataFrame) -> DataFrame:
@@ -102,10 +92,9 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 20) -> DataFrame:
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    app_id = edges.sparkSession.sparkContext.applicationId
-    evict_stale_app_entries(_KCORE_CACHE, app_id)
-    for prev in _KCORE_CACHE.pop(app_id, []):
-        prev.unpersist()
+    # kcore and core_decomposition share one held slot: either call
+    # releases the other's frames
+    hold("kcore")
     held: list[DataFrame] = []
     # materialize the edge projection ONCE (the triangles/LPA edge
     # discipline): an uncached input would otherwise re-run its whole
@@ -139,11 +128,11 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 20) -> DataFrame:
         nbr = colocate_for_guarded_joins(nbr, "b")
     # the mirror is SHARED with LPA and the coreness decomposition
     # via the semantic-plan session cache (r12) — owned there, never
-    # in this operator's pop-and-unpersist list
+    # among the frames this operator holds
     # materialize-on-miss (r13): the count job runs only when the
     # mirror is newly cached — LPA/coreness hits pay zero jobs here
-    nbr = session_plan_cache(MIRROR_CACHE, nbr, materialize=True)
-    _KCORE_CACHE[app_id] = held
+    nbr = session_plan_cache(nbr, materialize=True)
+    hold("kcore", *held)
     for _ in range(max_rounds):
         al = alive.select(F.col("node").alias("__kb"))
         deg = (
@@ -203,10 +192,7 @@ def core_decomposition(
     """
     if max_k < 1:
         raise ValueError(f"max_k must be >= 1, got {max_k}")
-    app_id = edges.sparkSession.sparkContext.applicationId
-    evict_stale_app_entries(_KCORE_CACHE, app_id)
-    for prev in _KCORE_CACHE.pop(app_id, []):
-        prev.unpersist()
+    hold("kcore")
     held: list[DataFrame] = []
     e = edges.select("u", "v")
     if not (edges.storageLevel.useMemory or edges.storageLevel.useDisk):
@@ -222,7 +208,7 @@ def core_decomposition(
     n_alive = alive.count()
     base = alive
     if max_k == 1:
-        _KCORE_CACHE[app_id] = held
+        hold("kcore", *held)
         return base.select(
             "node", F.lit(1).cast("bigint").alias("core")
         )
@@ -234,8 +220,8 @@ def core_decomposition(
         # then streams it with zero edge-side Exchange
         nbr = colocate_for_guarded_joins(nbr, "b")
     # shared with LPA / kcore via the session plan cache (r12)
-    nbr = session_plan_cache(MIRROR_CACHE, nbr, materialize=True)
-    _KCORE_CACHE[app_id] = held
+    nbr = session_plan_cache(nbr, materialize=True)
+    hold("kcore", *held)
     # Degree MEMOIZATION across rounds and levels (r12): ``deg``
     # always holds each node's alive-neighbor count over the CURRENT
     # alive set, so a round first filters the inherited table and

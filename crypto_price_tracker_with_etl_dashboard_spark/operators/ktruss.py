@@ -45,7 +45,7 @@ Which fixed order (r13): the FULL-graph (deg, id) order on the
 capped-node-induced subgraph — exactly the orientation
 operators/triangles.py builds for the same (edge list, cap), so the
 two operators share ONE cached degree table and ONE cached oriented
-edge list (ORIENT_CACHE).  The pre-r13 choice (degrees recounted
+edge list (the session plan cache).  The pre-r13 choice (degrees recounted
 WITHIN the capped subgraph) is just a different total order: by the
 argument above both enumerate every capped-subgraph triangle exactly
 once, the per-edge support counts are identical, hence each peel
@@ -72,16 +72,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crypto_price_tracker_with_etl_dashboard_spark.operators._session_cache import (
-    ORIENT_CACHE,
+    hold,
     session_plan_cache,
 )
 from crypto_price_tracker_with_etl_dashboard_spark.operators.triangles import (
-    _ORIENT_MAX_ENTRIES,
     capped_degree_table,
     degree_oriented_edges,
 )
-
-_KTRUSS_CACHE: dict[str, list[DataFrame]] = {}
 
 
 def _oriented_support(o: DataFrame) -> DataFrame:
@@ -151,17 +148,10 @@ def ktruss(
         raise ValueError(f"k must be >= 3 (k-2 >= 1 support), got {k}")
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    app_id = edges.sparkSession.sparkContext.applicationId
-    from crypto_price_tracker_with_etl_dashboard_spark.operators._broadcast_guard import (
-        evict_stale_app_entries,
-    )
-
-    evict_stale_app_entries(_KTRUSS_CACHE, app_id)
-    for prev in _KTRUSS_CACHE.pop(app_id, []):
-        prev.unpersist()
+    hold("ktruss")
     # Skip the cache when the CALLER already cached the input (r11
     # ADVICE): re-caching an identical plan warns ("Asked to cache
-    # already cached data") and the pop-and-unpersist on the NEXT call
+    # already cached data") and the release on the NEXT call
     # would drop a cache entry a sibling operator on the same edge
     # build still relies on, forcing a silent recompute.
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -182,18 +172,8 @@ def ktruss(
     # degree pass reads e once (populating an uncached-input cache in
     # a single branch — the r12 ADVICE e.count() concern), then the
     # orientation build reads cached e + cached deg.
-    deg = session_plan_cache(
-        ORIENT_CACHE,
-        capped_degree_table(e, max_degree),
-        max_entries=_ORIENT_MAX_ENTRIES,
-        materialize=True,
-    )
-    o = session_plan_cache(
-        ORIENT_CACHE,
-        degree_oriented_edges(e, deg),
-        max_entries=_ORIENT_MAX_ENTRIES,
-        materialize=True,
-    )
+    deg = session_plan_cache(capped_degree_table(e, max_degree), materialize=True)
+    o = session_plan_cache(degree_oriented_edges(e, deg), materialize=True)
     kept = None
     for r in range(rounds):
         sup = _oriented_support(o)
@@ -207,7 +187,7 @@ def ktruss(
             # docstring) — one job, partitions persisted like cache()
             kept = kept.localCheckpoint(eager=True)
         o = kept.select("src", "dst", "ddeg")
-    _KTRUSS_CACHE[app_id] = held
+    hold("ktruss", *held)
     # restore the canonical u < v key of the input contract; the
     # orientation key order is an internal detail
     return kept.select(

@@ -40,17 +40,14 @@ from pyspark.sql import functions as F
 
 from crypto_price_tracker_with_etl_dashboard_spark.operators._broadcast_guard import (
     colocate_for_guarded_joins,
-    evict_stale_app_entries,
     guarded_broadcast,
     hint_will_fit,
 )
 from crypto_price_tracker_with_etl_dashboard_spark.operators._session_cache import (
-    MIRROR_CACHE,
     cached_count,
+    hold,
     session_plan_cache,
 )
-
-_LPA_CACHE: dict[str, list] = {}
 
 
 def label_propagation(
@@ -69,10 +66,7 @@ def label_propagation(
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    app_id = edges.sparkSession.sparkContext.applicationId
-    evict_stale_app_entries(_LPA_CACHE, app_id)
-    for prev in _LPA_CACHE.pop(app_id, []):
-        prev.unpersist()
+    hold("lpa")
     held = []
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     if not (edges.storageLevel.useMemory or edges.storageLevel.useDisk):
@@ -82,9 +76,9 @@ def label_propagation(
         held.append(e)
         n_edges = e.count()  # materialize before the mirror fan-out
     else:
-        # caller-cached input: the count is memoized on the caller's
-        # object (r13), so repeat LPA calls over the same session-
-        # cached edge table skip the job entirely
+        # caller-cached input: a session-cached edge table keeps its
+        # count in its cache entry, so repeat LPA calls over it skip
+        # the job entirely
         n_edges = cached_count(edges)
     nbr = e.select(
         F.explode(
@@ -104,10 +98,10 @@ def label_propagation(
         # edge-side Exchange (only the O(nodes) label table shuffles)
         nbr = colocate_for_guarded_joins(nbr, "a")
     # shared with kcore / the coreness decomposition via the session
-    # plan cache (r12) — owned there, not in _LPA_CACHE
+    # plan cache (r12) — owned there, not held by this operator
     # materialize-on-miss (r13): zero jobs when kcore/coreness
     # already cached the identical mirror this session
-    nbr = session_plan_cache(MIRROR_CACHE, nbr, materialize=True)
+    nbr = session_plan_cache(nbr, materialize=True)
     labels = nbr.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
@@ -139,9 +133,8 @@ def label_propagation(
         # Under AQE a lazy localCheckpoint executes all upstream
         # stages at CONSTRUCTION (one toRdd compile + jobs per round);
         # the caller's single action now runs the identical stages.
-    out = labels.select("node", F.col("lbl").alias("community"))
-    _LPA_CACHE[app_id] = held
-    return out
+    hold("lpa", *held)
+    return labels.select("node", F.col("lbl").alias("community"))
 
 
 def sql_label_propagation(edges_cte: str, iters: int = 3) -> str:

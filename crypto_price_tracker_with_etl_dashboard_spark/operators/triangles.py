@@ -27,17 +27,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crypto_price_tracker_with_etl_dashboard_spark.operators._session_cache import (
-    ORIENT_CACHE,
+    hold,
     session_plan_cache,
 )
 
 # fixed-point scale for the clustering coefficient (parts-per-million)
 CC_SCALE = 1_000_000
-
-# ORIENT_CACHE holds TWO entries (deg + oriented) per (edge list,
-# cap) variant; 6 covers three interleaved variants without
-# unpersist/recache churn (the r12 ADVICE cap note).
-_ORIENT_MAX_ENTRIES = 6
 
 
 def capped_degree_table(e: DataFrame, max_degree: int | None) -> DataFrame:
@@ -45,7 +40,8 @@ def capped_degree_table(e: DataFrame, max_degree: int | None) -> DataFrame:
     degrees, filtered to nodes under the celebrity cap when set.  One
     explode + partial-agged count (not a union of two projections,
     whose branches would each re-read the upstream).  Shared between
-    triangle counting and the k-truss peel via ORIENT_CACHE (r13)."""
+    triangle counting and the k-truss peel via the session plan cache
+    (r13)."""
     deg = (
         e.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
@@ -64,7 +60,8 @@ def degree_oriented_edges(e: DataFrame, deg: DataFrame) -> DataFrame:
     order endpoints without a third lookup.  (deg, id) is a total
     order, so the oriented graph is a DAG and every triangle is
     enumerated exactly once as (a -> b -> c, a -> c).  Shared between
-    triangle counting and the k-truss peel via ORIENT_CACHE (r13)."""
+    triangle counting and the k-truss peel via the session plan cache
+    (r13)."""
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("udeg"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("vdeg"))
     lower_first = F.struct("udeg", "u") < F.struct("vdeg", "v")
@@ -78,26 +75,6 @@ def degree_oriented_edges(e: DataFrame, deg: DataFrame) -> DataFrame:
         )
     )
 
-# Session-scoped cache of the materialized intermediates (the oriented
-# edge list feeds THREE join branches and the degree table three more;
-# uncached, Spark re-runs the whole upstream edge build per branch —
-# measured 5.4s -> ~1.5s at sf0.1).  Evict-on-reentry keyed by
-# applicationId: unpersisting before the returned lazy DF executes
-# would force full recompute (see functions/dedup.py::_BANDED_CACHE).
-_CACHE: dict[str, list[DataFrame]] = {}
-
-
-def _hold(app_id: str, *dfs: DataFrame) -> None:
-    from crypto_price_tracker_with_etl_dashboard_spark.operators._broadcast_guard import (
-        evict_stale_app_entries,
-    )
-
-    evict_stale_app_entries(_CACHE, app_id)
-    prev = _CACHE.pop(app_id, None)
-    if prev is not None:
-        for d in prev:
-            d.unpersist()
-    _CACHE[app_id] = list(dfs)
 
 
 def triangle_counts(
@@ -166,6 +143,10 @@ def triangle_counts(
         # With max_degree >= 1 every hub has deg >= 2 neighbors, the
         # capped adjacency keeps >= 2 of them (cap >= 2), and w >= 1.
         raise ValueError("est_neighbor_cap requires max_degree >= 1")
+    # the materialized intermediates this call caches are held until
+    # the next call: unpersisting them before the returned lazy frame
+    # executes would force a full recompute
+    hold("triangles")
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     own_e = []
     if not (edges.storageLevel.useMemory or edges.storageLevel.useDisk):
@@ -190,18 +171,8 @@ def triangle_counts(
         .groupBy("node")
         .agg(F.count("*").alias("deg"))
     )
-    deg = session_plan_cache(
-        ORIENT_CACHE,
-        capped_degree_table(e, max_degree),
-        max_entries=_ORIENT_MAX_ENTRIES,
-        materialize=True,
-    )
-    oriented = session_plan_cache(
-        ORIENT_CACHE,
-        degree_oriented_edges(e, deg),
-        max_entries=_ORIENT_MAX_ENTRIES,
-        materialize=True,
-    )
+    deg = session_plan_cache(capped_degree_table(e, max_degree), materialize=True)
+    oriented = session_plan_cache(degree_oriented_edges(e, deg), materialize=True)
     held = own_e
 
     e1 = oriented.select(
@@ -244,7 +215,7 @@ def triangle_counts(
         )
     )
     if est_neighbor_cap is None:
-        _hold(edges.sparkSession.sparkContext.applicationId, *held)
+        hold("triangles", *held)
         return exact
 
     # ---- sampled-wedge estimator for the capped (hub) nodes -----------------
@@ -317,7 +288,7 @@ def triangle_counts(
         .alias("cc_ppm"),
         F.col("w").alias("n_sampled_wedges"),
     )
-    _hold(edges.sparkSession.sparkContext.applicationId, *held)
+    hold("triangles", *held)
     return exact.withColumn(
         "n_sampled_wedges", F.lit(0).cast("bigint")
     ).unionByName(est)

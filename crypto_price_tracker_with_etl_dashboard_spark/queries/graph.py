@@ -49,6 +49,9 @@ from crypto_price_tracker_with_etl_dashboard_spark.operators.hierarchy import (
 from crypto_price_tracker_with_etl_dashboard_spark.operators._broadcast_guard import (
     guarded_broadcast,
 )
+from crypto_price_tracker_with_etl_dashboard_spark.operators._session_cache import (
+    session_get_or_build,
+)
 from crypto_price_tracker_with_etl_dashboard_spark.operators.lpa import (
     label_propagation,
     sql_label_propagation,
@@ -61,30 +64,23 @@ from crypto_price_tracker_with_etl_dashboard_spark.queries import register
 from crypto_price_tracker_with_etl_dashboard_spark.sources import load_table
 
 _PR_ITERS = 4  # two full supplier<->customer diffusion round-trips
-# (applicationId, sf_dir) -> the cached aggregated supplier->customer
-# pair table.  Keyed like _EDGE_CACHE (r12 optimization): ~10 trade_*
-# queries run the identical lineitem-orders join + groupBy build, so
-# the second and later queries in one session reuse the one cached
-# table instead of rebuilding it (~1.4 s each at sf0.1).  The cache
-# dies with the application — nothing persists across bench runs.
-_HALF_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _trade_half(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The aggregated supplier->customer pair table (sup, cust, w),
-    cached once per (applicationId, sf_dir) and shared by every
-    trade_* query — the _EDGE_CACHE discipline.  Node ids are
+    cached once per (session, sf_dir) and shared by every trade_*
+    query (r12): ~10 of them run the identical lineitem-orders join +
+    groupBy build, so the second and later ones in a session reuse
+    the one cached table (~1.4 s each at sf0.1).  Node ids are
     numeric — supplier s -> 2s, customer c -> 2c+1 (disjoint key
     spaces, and integer shuffle keys hash ~2x faster than the
     's123'/'c456' string encoding)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _HALF_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for stale in [k for k in _HALF_CACHE if k != key]:
-        if stale[0] == spark.sparkContext.applicationId:
-            _HALF_CACHE[stale].unpersist()  # other sf_dir, same app
-        _HALF_CACHE.pop(stale, None)
+    return session_get_or_build(
+        ("trade_half", sf_dir), lambda: _build_trade_half(spark, sf_dir)
+    )
+
+
+def _build_trade_half(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     # the certified graph is the FIRST ORDER YEAR's trade network —
     # a time-sliced influence analysis (the usual analytical cut);
@@ -94,7 +90,7 @@ def _trade_half(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderdate") < "1996-01-01")
         .select("o_orderkey", "o_custkey")
     )
-    half = (
+    return (
         li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
         .select(
             (F.col("l_suppkey") * 2).cast("bigint").alias("sup"),
@@ -104,8 +100,6 @@ def _trade_half(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("bigint").alias("w"))
         .cache()  # consumed by both mirror branches + later queries
     )
-    _HALF_CACHE[key] = half
-    return half
 
 
 def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -185,9 +179,6 @@ _MAX_NODE_DEGREE = 512
 _EST_NEIGHBOR_CAP = 64
 
 
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _cooccur_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User co-occurrence edge list, each undirected edge once
     (u < v).  ONE shuffle builds the per-cell sorted user sets
@@ -197,15 +188,15 @@ def _cooccur_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-self-join) pays four shuffles over the cell stream for the
     identical edge list.
 
-    The built edge list is cached per (applicationId, sf_dir) — the
+    The built edge list is cached per (session, sf_dir) — the
     triangle and community queries share it, so the second graph
-    query (and every bench re-run) skips the build (~1 s at sf0.1).
-    Keyed by applicationId, not id(session) (the _IVF_INDEX
-    discipline)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    query (and every bench re-run) skips the build (~1 s at sf0.1)."""
+    return session_get_or_build(
+        ("cooccur_edges", sf_dir), lambda: _build_cooccur_edges(spark, sf_dir)
+    )
+
+
+def _build_cooccur_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     per_cell = (
         ev.select(
@@ -233,7 +224,6 @@ def _cooccur_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cache()
     )
     edges.count()  # materialize before either consumer fans out
-    _EDGE_CACHE[key] = edges
     return edges
 
 

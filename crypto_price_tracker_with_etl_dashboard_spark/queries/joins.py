@@ -89,7 +89,7 @@ register(
 # the shuffle is paid ONCE at write time and every later join on the
 # bucket key is exchange-free — so the tables are written once per
 # (session, sf_dir) and every query call after that only reads
-# (build/query split, same rationale as vector.py's _IVF_INDEX).
+# (build/query split, same rationale as vector.py's _ivf_index).
 _BUCKETED: dict[tuple[str, str], tuple[str, str]] = {}
 _N_BUCKETS = 8  # test-scale stand-in; at 100 TB pick ~|table|/128MB
 

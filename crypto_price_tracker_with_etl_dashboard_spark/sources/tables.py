@@ -13,8 +13,12 @@ NULLS-FIRST ordering api/server.js:76) are exercised.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import LongType, StructField, StructType
 
 TABLES = [
     "region",
@@ -31,32 +35,30 @@ TABLES = [
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet loader.  The driver's events.parquet stores ``ts`` as
-    TIMESTAMP(NANOS), which Spark's vectorized reader rejects; we
-    read nanos as long (legacy conf) and truncate to microseconds —
-    the same truncation DuckDB applies when it maps parquet ns to its
-    microsecond TIMESTAMP, so both engines see identical values."""
+    """Parquet loader.  An events.parquet may store ``ts`` as
+    TIMESTAMP(NANOS), which Spark's parquet reader rejects.  The unit
+    comes from the parquet footer, read on the driver (no Spark job);
+    a nanosecond file is read with an explicit schema that types
+    ``ts`` as its raw INT64 and truncates it to microseconds — the
+    same truncation DuckDB applies when it maps parquet ns to its
+    microsecond TIMESTAMP, so both engines see identical values.  No
+    session conf is touched, so concurrent reads on one session stay
+    independent."""
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        # Scope the legacy conf to THIS read: the schema is captured
-        # when spark.read resolves, so restoring immediately after
-        # does not affect the returned DataFrame's execution
-        # (verified) — but leaving it set session-wide would silently
-        # retype TIMESTAMP(NANOS) columns to bigint in every later
-        # unrelated parquet read.
-        key = "spark.sql.legacy.parquet.nanosAsLong"
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, "true")
-        try:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        arrow = pads.dataset(path, format="parquet").schema
+        ts = arrow.field("ts").type
+        if pa.types.is_timestamp(ts) and ts.unit == "ns":
+            schema = StructType(
+                [
+                    StructField(f.name, LongType(), f.nullable) if f.name == "ts" else f
+                    for f in from_arrow_schema(arrow)
+                ]
+            )
+            return spark.read.schema(schema).parquet(path).withColumn(
+                "ts", F.expr("timestamp_micros(ts div 1000)")
+            )
+    return spark.read.parquet(path)
 
 
 def fan_out(df: DataFrame) -> DataFrame:

@@ -260,8 +260,8 @@ def test_guard_log_prunes_other_applications_on_insert(spark, small_graph):
     """Two sequential Spark applications must not cross-contaminate
     the guard log (r10 verdict ask #8): the first insert under a new
     applicationId evicts every other application's records — the
-    _HITS_CACHE pop-on-entry convention — so a finished application's
-    log cannot leak for the process lifetime."""
+    session cache's stale-application rule — so a finished
+    application's log cannot leak for the process lifetime."""
     bg._GUARD_LOG["app-from-a-previous-session"] = [
         {"op": "lpa", "n_nodes": 1, "limit": 1, "hinted": True}
     ]
@@ -290,42 +290,39 @@ def test_guard_log_caps_per_app_length(spark, small_graph):
 
 
 def test_operator_caches_evict_stale_apps(spark, small_graph):
-    """r11 ADVICE: the operator caches' pop-on-entry only covered the
-    CURRENT application id — entries for finished applications leaked
-    DataFrame handles for the process lifetime.  Each operator now
-    drops other-app entries on entry (without unpersist: the stale
-    app's SparkContext is stopped, only the handles leak)."""
+    """r11 ADVICE: entries recorded under a finished application must
+    not leak DataFrame handles for the process lifetime.  Every
+    operator's first session-cache call drops other-app entries, and
+    drops them without unpersist: the stale app's SparkContext is
+    stopped, only the handles remain."""
     from crypto_price_tracker_with_etl_dashboard_spark.operators import (
-        hits as hits_mod,
-        kcore as kcore_mod,
-        ktruss as ktruss_mod,
-        lpa as lpa_mod,
-        pagerank as pr_mod,
-        triangles as tri_mod,
+        _session_cache as sc,
     )
     from crypto_price_tracker_with_etl_dashboard_spark.operators.ktruss import ktruss
+    from crypto_price_tracker_with_etl_dashboard_spark.operators.triangles import (
+        triangle_counts,
+    )
 
-    caches = {
-        "lpa": lpa_mod._LPA_CACHE,
-        "kcore": kcore_mod._KCORE_CACHE,
-        "ktruss": ktruss_mod._KTRUSS_CACHE,
-        "pagerank": pr_mod._PR_CACHE,
-        "hits": hits_mod._HITS_CACHE,
-        "triangles": tri_mod._CACHE,
-    }
-    for cache in caches.values():
-        cache["stale-finished-app"] = [object()]
+    class StaleFrame:
+        def unpersist(self):
+            raise AssertionError("a stale entry must be dropped without unpersist")
+
     weighted = small_graph.select(
         F.col("u").alias("src"), F.col("v").alias("dst"), F.lit(1).alias("w")
     )
-    label_propagation(small_graph, iters=1).collect()
-    kcore(small_graph, k=2).collect()
-    ktruss(small_graph, k=3, rounds=1).collect()
-    pagerank(weighted, iters=1).collect()
-    hits(weighted, iters=1).collect()
-    tri_mod.triangle_counts(small_graph).collect()
-    for name, cache in caches.items():
-        assert "stale-finished-app" not in cache, name
+    runs = {
+        "lpa": lambda: label_propagation(small_graph, iters=1),
+        "kcore": lambda: kcore(small_graph, k=2),
+        "ktruss": lambda: ktruss(small_graph, k=3, rounds=1),
+        "pagerank": lambda: pagerank(weighted, iters=1),
+        "hits": lambda: hits(weighted, iters=1),
+        "triangles": lambda: triangle_counts(small_graph),
+    }
+    for name, run in runs.items():
+        stale = sc._Entry("stale-finished-app", ("stale", name), (StaleFrame(),))
+        sc._ENTRIES.insert(0, stale)
+        run().collect()
+        assert stale not in sc._ENTRIES, name
 
 
 def test_colocate_fallback_logged_and_uses_default_parallelism(

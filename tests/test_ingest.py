@@ -84,3 +84,40 @@ def test_load_table_does_not_leak_nanos_conf(spark):
     df = load_table(spark, SF_SMALL, "events")
     assert spark.conf.get(key, None) in (None, "false")
     assert df.count() > 0  # scoped conf: the read still executes
+
+
+def test_load_table_threads_mix_ns_and_us_files(spark, tmp_path):
+    """One thread reads a TIMESTAMP(NANOS) events file while another
+    reads a microsecond one on the same session: each result equals
+    its single-thread read, and the nanos conf is never set."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from crypto_price_tracker_with_etl_dashboard_spark.sources import load_table
+
+    stamps = ["2024-01-01T00:00:00.123456789", "2024-01-02T03:04:05.987654321"]
+    for unit in ("ns", "us"):
+        (tmp_path / unit).mkdir()
+        pq.write_table(
+            pa.table({
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(stamps, pa.string()).cast(pa.timestamp("ns"))
+                .cast(pa.timestamp(unit), safe=False),
+                "value": [1.0, 2.0],
+            }),
+            str(tmp_path / unit / "events.parquet"),
+        )
+
+    def read(unit):
+        return sorted(load_table(spark, str(tmp_path / unit), "events").collect())
+
+    alone = {unit: read(unit) for unit in ("ns", "us")}
+    assert alone["ns"] == alone["us"]  # ns truncates to the us values
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    with ThreadPoolExecutor(2) as pool:
+        for _ in range(4):
+            got = dict(zip(("ns", "us"), pool.map(read, ("ns", "us"))))
+            assert got == alone
+            assert spark.conf.get(key, None) in (None, "false")

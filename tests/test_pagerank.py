@@ -75,3 +75,17 @@ def test_pagerank_plan_broadcasts_ranks(spark, toy_edges):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "InMemoryTableScan" in plan  # cached edge list feeds the rounds
+
+
+@pytest.mark.parametrize("renamed", ["src", "dst"])
+def test_pagerank_edge_column_named_node(spark, toy_edges, renamed):
+    """A caller's src or dst column may be named ``node``: the rank
+    table's join key is reserved, so the round join stays unambiguous
+    and the ranks equal the same graph's ranks under plain names."""
+    cols = {"src": "src", "dst": "dst", renamed: "node"}
+    edges = toy_edges.select(
+        F.col("src").alias(cols["src"]), F.col("dst").alias(cols["dst"]), "w"
+    )
+    got = sorted(pagerank(edges, src=cols["src"], dst=cols["dst"], iters=4).collect())
+    want = sorted(pagerank(toy_edges, iters=4).collect())
+    assert got == want
