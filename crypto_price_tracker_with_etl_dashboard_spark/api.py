@@ -208,8 +208,8 @@ class PriceTracker:
 
     def ema_macd(self, fast: int = 12, slow: int = 26) -> DataFrame:
         """Recursive EMA(fast)/EMA(slow) + MACD per symbol — exact
-        integer recursion, one mapInPandas pass
-        (operators/indicators.py::ema_macd)."""
+        integer recursion folded per symbol after one shuffle
+        (operators/indicators.py::ema_macd on ``_keyed_fold``)."""
         from crypto_price_tracker_with_etl_dashboard_spark.operators.indicators import (
             ema_macd,
         )

@@ -24,9 +24,11 @@ Three call shapes:
   matched with Catalyst's ``sameResult`` (the check Spark's own
   CacheManager uses), so expression-id drift between calls never
   defeats a match and different parameters or inputs simply miss.
-  ``sameResult`` erases alias names, so the column names must match
-  too: a rename-only variant gets its own entry, never a frame with
-  the other variant's names.
+  ``sameResult`` erases alias names, so a rename-only variant shares
+  the entry and gets the stored frame renamed to its own names.  One
+  entry per Spark cache entry: Spark's ``cache()``/``unpersist()``
+  match plans by ``sameResult`` too, so two registry entries for one
+  plan would share storage, and evicting either would uncache both.
 - :func:`session_get_or_build` keys an entry explicitly, for builds
   that run Spark jobs while they build (a trained index, a
   materialized edge list).
@@ -39,7 +41,7 @@ Entries hold inputs that queries share, never query results.
 from __future__ import annotations
 
 import threading
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,6 +59,8 @@ class _Entry:
     frames: tuple[DataFrame, ...]
     plan: object = None  # analyzed JVM plan of a plan-keyed entry
     count: int | None = None
+    # column names -> frames[0] renamed to them (plan-keyed entries)
+    renamed: dict = field(default_factory=dict)
 
 
 _LOCK = threading.Lock()
@@ -116,29 +120,30 @@ def cached_count(df: DataFrame) -> int:
     simply counted."""
     with _LOCK:
         entry = next(
-            (e for e in _ENTRIES if len(e.frames) == 1 and e.frames[0] is df), None
+            (
+                e
+                for e in _ENTRIES
+                if len(e.frames) == 1
+                and (e.frames[0] is df or any(f is df for f in e.renamed.values()))
+            ),
+            None,
         )
     return _counted(entry, df)
 
 
 def session_plan_cache(df: DataFrame, materialize: bool = False) -> DataFrame:
     """The cached entry whose analyzed plan ``sameResult``-matches
-    ``df``, else ``df.cache()`` newly stored.  With ``materialize=True``
-    a new entry is populated with one count job (kept for
-    :func:`cached_count`); a hit runs zero jobs."""
-    plan, names = df._jdf.queryExecution().analyzed(), df.columns
+    ``df``, else ``df.cache()`` newly stored, under ``df``'s column
+    names.  With ``materialize=True`` a new entry is populated with
+    one count job (kept for :func:`cached_count`); a hit runs zero
+    jobs."""
+    plan, names = df._jdf.queryExecution().analyzed(), tuple(df.columns)
     app = _app()
     with _LOCK:
         _live(app)
         entry = _hit(
             next(
-                (
-                    e
-                    for e in _ENTRIES
-                    if e.plan is not None
-                    and e.frames[0].columns == names
-                    and e.plan.sameResult(plan)
-                ),
+                (e for e in _ENTRIES if e.plan is not None and e.plan.sameResult(plan)),
                 None,
             )
         )
@@ -146,10 +151,15 @@ def session_plan_cache(df: DataFrame, materialize: bool = False) -> DataFrame:
         if entry is None:
             entry = _Entry(app, None, (df.cache(),), plan=plan)
             evicted = _insert(entry)
+        frame = entry.frames[0]
+        if tuple(frame.columns) != names:
+            if names not in entry.renamed:
+                entry.renamed[names] = frame.toDF(*names)
+            frame = entry.renamed[names]
     _unpersist(evicted)
     if materialize:
         _counted(entry, entry.frames[0])
-    return entry.frames[0]
+    return frame
 
 
 def session_get_or_build(key: object, build: Callable[[], DataFrame]) -> DataFrame:

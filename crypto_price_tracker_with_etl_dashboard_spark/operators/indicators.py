@@ -16,8 +16,11 @@ engine-specific.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from crypto_price_tracker_with_etl_dashboard_spark.operators.exact import SCALE
 
@@ -227,6 +230,107 @@ def sql_max_drawdown(
     """
 
 
+_NO_KEY = object()  # "no current key": unlike None, equal to no key value
+
+
+def _keyed_fold(
+    rows: DataFrame,
+    key: str,
+    order: list[str],
+    step: Callable,
+    inputs: list[str],
+    outs: list[str],
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """Run ``step`` over each key's rows of ``rows`` in ``order``: the
+    one execution shape of the certified integer recursions
+    (:func:`ema_macd`, :func:`heikin_ashi`, :func:`holt_smooth`,
+    :func:`atr`, :func:`garch_vol`).
+
+    ``step(state, *inputs) -> (state, out)`` sees ``state=None`` on a
+    key's first row; ``out`` is a tuple of ints named by ``outs``
+    (returned as long columns after ``key`` and the ``keep``
+    pass-through columns), or ``None`` to emit no row for that input.
+
+    Execution shape: ONE shuffle (repartition on the key) + an
+    in-partition sort on (key, order), then ``mapInPandas`` streams
+    each partition's rows through the fold.  The sort makes every key
+    one contiguous run of its partition (NULL keys included: they
+    hash to one partition and sort first), so at most one key per
+    Arrow batch continues from the previous batch; its state is
+    carried across the boundary in a per-key dict.  "No current key"
+    is a sentinel, not ``None``, so a NULL key's run continues too.
+    This deliberately avoids ``groupBy().applyInPandas``: that path
+    flushes one Arrow batch AND one Python call PER GROUP (~1-2 ms
+    each — measured 1.7-2.8s of pure per-group overhead on 1,500
+    single-symbol groups at sf0.1, identity function), while the
+    mapInPandas stream pays per-10k-row-batch overhead instead
+    (3.7s -> 0.9s for ema_macd).  Each key's fold is inherently
+    sequential (operator semantics, not an implementation choice);
+    keys process in parallel across partitions.
+    """
+    import numpy as np
+
+    schema = StructType(
+        [rows.schema[c] for c in (key, *keep)]
+        + [StructField(c, LongType()) for c in outs]
+    )
+
+    def run(batches):
+        state: dict = {}
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            cur, st = _NO_KEY, None
+            idx, res = [], []
+            cols = [pdf[c].tolist() for c in (key, *inputs)]
+            for i, (k, *xs) in enumerate(zip(*cols)):
+                if k != cur:
+                    if cur is not _NO_KEY:
+                        state[cur] = st
+                    cur, st = k, state.get(k)
+                st, out = step(st, *xs)
+                if out is not None:
+                    idx.append(i)
+                    res.append(out)
+            state[cur] = st
+            frame = pdf[[key, *keep]].take(idx).reset_index(drop=True)
+            vals = np.array(res, dtype=np.int64).reshape(len(res), len(outs))
+            for j, c in enumerate(outs):
+                frame[c] = vals[:, j]
+            yield frame
+
+    return (
+        rows.repartition(key)
+        .sortWithinPartitions(key, *order)
+        .mapInPandas(run, schema=schema)
+    )
+
+
+def ema_step(fast: int, slow: int) -> Callable:
+    """The EMA(fast)/EMA(slow) fold step of :func:`ema_macd`, shared
+    with the streaming twin (streaming/indicators.py): state and
+    output are ``(ef, es, rn)``, the two fixed-point EMAs and the
+    1-based tick index after input ``xu``."""
+    if not (1 <= fast < slow):
+        raise ValueError(f"need 1 <= fast < slow, got {fast}, {slow}")
+    hf, hs = (fast + 1) // 2, (slow + 1) // 2
+
+    def step(st, xu):
+        if st is None:
+            st = (xu, xu, 1)
+        else:
+            ef, es, rn = st
+            st = (
+                (2 * xu + (fast - 1) * ef + hf) // (fast + 1),
+                (2 * xu + (slow - 1) * es + hs) // (slow + 1),
+                rn + 1,
+            )
+        return st, st
+
+    return step
+
+
 def ema_macd(
     prices: DataFrame,
     key: str,
@@ -238,7 +342,7 @@ def ema_macd(
     """EMA(fast), EMA(slow) and the MACD line per key over the
     ordered tick series — the recursive indicator RSI's docstring
     scopes out of window functions, expressed as a per-key sequential
-    fold instead.
+    fold (:func:`_keyed_fold`) instead.
 
     Exactness discipline: the classic recurrence
     ``ema_t = a*x_t + (1-a)*ema_{t-1}`` with ``a = 2/(n+1)`` is
@@ -252,93 +356,28 @@ def ema_macd(
     via Python arbitrary-precision ints — produces bit-identical
     BIGINT states with no accumulated float drift.  The only double
     ops are the final ``eu / SCALE`` divisions, identical on both.
-
-    Execution shape: ONE shuffle (repartition on the key) + an
-    in-partition sort on (key, order_by), then ``mapInPandas``
-    streams each partition's key-contiguous rows through the
-    recursion, carrying a tiny per-key state dict across Arrow
-    batches.  This deliberately avoids ``groupBy().applyInPandas``:
-    that path flushes one Arrow batch AND one Python call PER GROUP
-    (~1-2 ms each — measured 1.7-2.8s of pure per-group overhead on
-    1,500 single-symbol groups at sf0.1, identity function), while
-    the mapInPandas stream pays per-10k-row-batch overhead instead
-    (3.7s -> 0.9s).  The per-key fold is inherently sequential (each
-    term depends on the previous — operator semantics, not an
-    implementation choice); keys process in parallel across
-    partitions.  Output is O(rows): (key, rn, ema_fast, ema_slow,
+    Output is O(rows): (key, rn, ema_fast, ema_slow,
     macd = ema_fast - ema_slow).
 
     Rows with NULL price are dropped (they have no position in the
     recurrence); ``rn`` is the 1-based tick index in ``order_by``
     order so the result is self-describing without the raw table.
     """
-    if not (1 <= fast < slow):
-        raise ValueError(f"need 1 <= fast < slow, got {fast}, {slow}")
-    import numpy as np
-    import pandas as pd
-
-    out_schema = (
-        f"{key} string, rn long, ema_fast double, ema_slow double, macd double"
-    )
+    step = ema_step(fast, slow)
     ord_names = [f"__o{i}" for i in range(len(order_by))]
-    hf, hs = (fast + 1) // 2, (slow + 1) // 2
-
-    def run(batches):
-        # key -> (ef, es, rn): carries a key's recursion across the
-        # Arrow-batch boundary that may split it (keys are contiguous
-        # within the sorted partition, so at most one key per batch
-        # continues; the dict handles it without assuming which).
-        state: dict = {}
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            ks = pdf[key].to_numpy()
-            xs = pdf["__xu"].to_numpy().tolist()
-            ef_arr = np.empty(n, dtype=np.int64)
-            es_arr = np.empty(n, dtype=np.int64)
-            rn_arr = np.empty(n, dtype=np.int64)
-            cur = None
-            ef = es = rn = 0
-            for i in range(n):
-                k = ks[i]
-                if k != cur:
-                    if cur is not None:
-                        state[cur] = (ef, es, rn)
-                    cur = k
-                    ef, es, rn = state.get(k, (0, 0, 0))
-                xu = int(xs[i])
-                if rn == 0:
-                    ef = es = xu
-                else:
-                    ef = (2 * xu + (fast - 1) * ef + hf) // (fast + 1)
-                    es = (2 * xu + (slow - 1) * es + hs) // (slow + 1)
-                rn += 1
-                ef_arr[i] = ef
-                es_arr[i] = es
-                rn_arr[i] = rn
-            state[cur] = (ef, es, rn)
-            yield pd.DataFrame(
-                {
-                    key: ks,
-                    "rn": rn_arr,
-                    "ema_fast": ef_arr / SCALE,
-                    "ema_slow": es_arr / SCALE,
-                    "macd": (ef_arr - es_arr) / SCALE,
-                }
-            )
-
-    ordered = (
-        prices.filter(F.col(price).isNotNull())
-        .select(
-            F.col(key).cast("string").alias(key),
-            F.round(F.col(price) * SCALE).cast("bigint").alias("__xu"),
-            *[F.col(c).alias(n) for c, n in zip(order_by, ord_names)],
-        )
-        .repartition(F.col(key))
-        .sortWithinPartitions(key, *ord_names)
+    rows = prices.filter(F.col(price).isNotNull()).select(
+        F.col(key).cast("string").alias(key),
+        F.round(F.col(price) * SCALE).cast("bigint").alias("__xu"),
+        *[F.col(c).alias(n) for c, n in zip(order_by, ord_names)],
     )
-    return ordered.mapInPandas(run, schema=out_schema)
+    folded = _keyed_fold(rows, key, ord_names, step, ["__xu"], ["__ef", "__es", "rn"])
+    return folded.select(
+        key,
+        "rn",
+        (F.col("__ef") / SCALE).alias("ema_fast"),
+        (F.col("__es") / SCALE).alias("ema_slow"),
+        ((F.col("__ef") - F.col("__es")) / SCALE).alias("macd"),
+    )
 
 
 def sql_ema_macd(
@@ -364,7 +403,7 @@ def sql_ema_macd(
       SELECT s.{key}, s.rn,
              (2*s.xu + {fast - 1}*e.ef + {(fast + 1) // 2}) // {fast + 1},
              (2*s.xu + {slow - 1}*e.es + {(slow + 1) // 2}) // {slow + 1}
-      FROM seq s JOIN ema e ON s.{key} = e.{key} AND s.rn = e.rn + 1
+      FROM seq s JOIN ema e ON s.{key} IS NOT DISTINCT FROM e.{key} AND s.rn = e.rn + 1
     )
     SELECT {key}, rn,
            CAST(ef AS DOUBLE) / {SCALE} AS ema_fast,
@@ -984,86 +1023,44 @@ def heikin_ashi(
     ((s + 2) // 4, (s + 1) // 2 — floor division, matching DuckDB's
     `//`), so a WITH RECURSIVE oracle re-derives every candle
     bit-for-bit; the only doubles are the final /SCALE renders.
-    Same execution shape too: one repartition on the key + in-
-    partition sort, then ONE ``mapInPandas`` stream with a per-key
-    state dict carried across Arrow batches (never per-group
-    applyInPandas).
     """
-    import numpy as np
 
-    out_schema = (
-        f"{key} string, {order_col} timestamp, rn long, "
-        "ha_open double, ha_high double, ha_low double, ha_close double"
+    def step(st, o, h, l, c):
+        hc = (o + h + l + c + 2) // 4
+        if st is None:
+            ho, rn = (o + c + 1) // 2, 1
+        else:
+            ho, rn = (st[0] + st[1] + 1) // 2, st[2] + 1
+        return (ho, hc, rn), (rn, ho, max(h, ho, hc), min(l, ho, hc), hc)
+
+    # a window whose ticks all carry NULL price yields NULL OHLC
+    # cells; they have no place in the recursion (and would NaN the
+    # int64 fold) — drop them, as the SQL twin does
+    rows = candles.filter(
+        F.col("open").isNotNull() & F.col("high").isNotNull()
+        & F.col("low").isNotNull() & F.col("close").isNotNull()
+    ).select(
+        F.col(key).cast("string").alias(key),
+        F.col(order_col),
+        *[
+            F.round(F.col(c) * SCALE).cast("bigint").alias(f"__{c}")
+            for c in ("open", "high", "low", "close")
+        ],
     )
-
-    def run(batches):
-        state: dict = {}  # key -> (ha_open_u, ha_close_u, rn)
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            ks = pdf[key].to_numpy()
-            ou = pdf["__ou"].to_numpy().tolist()
-            hu = pdf["__hu"].to_numpy().tolist()
-            lu = pdf["__lu"].to_numpy().tolist()
-            cu = pdf["__cu"].to_numpy().tolist()
-            ho_a = np.empty(n, dtype=np.int64)
-            hh_a = np.empty(n, dtype=np.int64)
-            hl_a = np.empty(n, dtype=np.int64)
-            hc_a = np.empty(n, dtype=np.int64)
-            rn_a = np.empty(n, dtype=np.int64)
-            cur = None
-            ho = hc = rn = 0
-            for i in range(n):
-                k = ks[i]
-                if k != cur:
-                    cur = k
-                    if k in state:
-                        ho, hc, rn = state[k]
-                    else:
-                        ho, hc, rn = None, None, 0
-                hc_new = (ou[i] + hu[i] + lu[i] + cu[i] + 2) // 4
-                if rn == 0:
-                    ho_new = (ou[i] + cu[i] + 1) // 2
-                else:
-                    ho_new = (ho + hc + 1) // 2
-                rn += 1
-                ho, hc = ho_new, hc_new
-                state[k] = (ho, hc, rn)
-                ho_a[i] = ho
-                hc_a[i] = hc
-                hh_a[i] = max(hu[i], ho, hc)
-                hl_a[i] = min(lu[i], ho, hc)
-                rn_a[i] = rn
-            out = pdf[[key, order_col]].copy()
-            out["rn"] = rn_a
-            out["ha_open"] = ho_a / SCALE
-            out["ha_high"] = hh_a / SCALE
-            out["ha_low"] = hl_a / SCALE
-            out["ha_close"] = hc_a / SCALE
-            yield out
-
-    prepared = (
-        candles
-        # a window whose ticks all carry NULL price yields NULL OHLC
-        # cells; they have no place in the recursion (and would NaN
-        # the int64 fold) — drop them, as the SQL twin does
-        .filter(
-            F.col("open").isNotNull() & F.col("high").isNotNull()
-            & F.col("low").isNotNull() & F.col("close").isNotNull()
-        )
-        .select(
-            F.col(key).cast("string").alias(key),
-            F.col(order_col),
-            F.round(F.col("open") * SCALE).cast("bigint").alias("__ou"),
-            F.round(F.col("high") * SCALE).cast("bigint").alias("__hu"),
-            F.round(F.col("low") * SCALE).cast("bigint").alias("__lu"),
-            F.round(F.col("close") * SCALE).cast("bigint").alias("__cu"),
-        )
-        .repartition(key)
-        .sortWithinPartitions(key, order_col)
+    outs = ["rn", "__ho", "__hh", "__hl", "__hc"]
+    folded = _keyed_fold(
+        rows, key, [order_col], step,
+        ["__open", "__high", "__low", "__close"], outs, keep=(order_col,),
     )
-    return prepared.mapInPandas(run, out_schema)
+    return folded.select(
+        key,
+        order_col,
+        "rn",
+        *[
+            (F.col(u) / SCALE).alias(name)
+            for u, name in zip(outs[1:], ("ha_open", "ha_high", "ha_low", "ha_close"))
+        ],
+    )
 
 
 def sql_heikin_ashi(candles_cte: str, key: str, order_col: str) -> str:
@@ -1095,7 +1092,7 @@ def sql_heikin_ashi(candles_cte: str, key: str, order_col: str) -> str:
              (h.ho + h.hc + 1) // 2,
              (s.ou + s.hu + s.lu + s.cu + 2) // 4,
              s.hu, s.lu
-      FROM seq s JOIN ha h ON s.{key} = h.{key} AND s.rn = h.rn + 1
+      FROM seq s JOIN ha h ON s.{key} IS NOT DISTINCT FROM h.{key} AND s.rn = h.rn + 1
     )
     SELECT {key}, {order_col}, rn,
            CAST(ho AS DOUBLE) / {SCALE} AS ha_open,
@@ -1135,65 +1132,39 @@ def holt_smooth(
     toward zero — the fold therefore uses explicit truncating
     division (``-((-n) // d)`` for negative numerators) so the WITH
     RECURSIVE oracle re-derives every (level, trend) bit-for-bit.
-    Seed: l_1 = x_1, b_1 = 0.  Same one-mapInPandas execution shape
-    as :func:`ema_macd`.
+    Seed: l_1 = x_1, b_1 = 0.
     """
     if alpha_inv < 2 or gamma_inv < 2:
         raise ValueError("alpha_inv and gamma_inv must be >= 2")
-    import numpy as np
-
-    out_schema = (
-        f"{key} string, {order_col} timestamp, rn long, "
-        "level double, trend double, forecast_next double"
-    )
     a, g = alpha_inv, gamma_inv
     ha, hg = a // 2, g // 2
 
-    def run(batches):
-        state: dict = {}  # key -> (l, b, rn)
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            ks = pdf[key].to_numpy()
-            xs = pdf["__xu"].to_numpy().tolist()
-            l_a = np.empty(n, dtype=np.int64)
-            b_a = np.empty(n, dtype=np.int64)
-            rn_a = np.empty(n, dtype=np.int64)
-            cur = None
-            l = b = rn = 0
-            for i in range(n):
-                k = ks[i]
-                if k != cur:
-                    cur = k
-                    l, b, rn = state.get(k, (None, None, 0))
-                if rn == 0:
-                    l, b = xs[i], 0
-                else:
-                    l_new = _tdiv(xs[i] + (a - 1) * (l + b) + ha, a)
-                    b = _tdiv((l_new - l) + (g - 1) * b + hg, g)
-                    l = l_new
-                rn += 1
-                state[k] = (l, b, rn)
-                l_a[i], b_a[i], rn_a[i] = l, b, rn
-            out = pdf[[key, order_col]].copy()
-            out["rn"] = rn_a
-            out["level"] = l_a / SCALE
-            out["trend"] = b_a / SCALE
-            out["forecast_next"] = (l_a + b_a) / SCALE
-            yield out
+    def step(st, x):
+        if st is None:
+            st = (x, 0, 1)
+        else:
+            l, b, rn = st
+            l_new = _tdiv(x + (a - 1) * (l + b) + ha, a)
+            st = (l_new, _tdiv((l_new - l) + (g - 1) * b + hg, g), rn + 1)
+        return st, st
 
-    prepared = (
-        series.filter(F.col(value).isNotNull())
-        .select(
-            F.col(key).cast("string").alias(key),
-            F.col(order_col),
-            F.round(F.col(value) * SCALE).cast("bigint").alias("__xu"),
-        )
-        .repartition(key)
-        .sortWithinPartitions(key, order_col)
+    rows = series.filter(F.col(value).isNotNull()).select(
+        F.col(key).cast("string").alias(key),
+        F.col(order_col),
+        F.round(F.col(value) * SCALE).cast("bigint").alias("__xu"),
     )
-    return prepared.mapInPandas(run, out_schema)
+    folded = _keyed_fold(
+        rows, key, [order_col], step, ["__xu"], ["__l", "__b", "rn"],
+        keep=(order_col,),
+    )
+    return folded.select(
+        key,
+        order_col,
+        "rn",
+        (F.col("__l") / SCALE).alias("level"),
+        (F.col("__b") / SCALE).alias("trend"),
+        ((F.col("__l") + F.col("__b")) / SCALE).alias("forecast_next"),
+    )
 
 
 def sql_holt_smooth(
@@ -1221,7 +1192,7 @@ def sql_holt_smooth(
              (s.xu + {a - 1} * (h.l + h.b) + {ha}) // {a},
              (((s.xu + {a - 1} * (h.l + h.b) + {ha}) // {a}) - h.l
               + {g - 1} * h.b + {hg}) // {g}
-      FROM seq s JOIN holt h ON s.{key} = h.{key} AND s.rn = h.rn + 1
+      FROM seq s JOIN holt h ON s.{key} IS NOT DISTINCT FROM h.{key} AND s.rn = h.rn + 1
     )
     SELECT {key}, {order_col}, rn,
            CAST(l AS DOUBLE) / {SCALE} AS level,
@@ -1545,79 +1516,46 @@ def atr(
 
     so every state is an exact integer and a WITH RECURSIVE oracle
     re-derives the series bit-for-bit.  Every operand is nonnegative
-    (true ranges are), so floor and truncating division agree.
-
-    Execution shape is the ema_macd stream: ONE key repartition +
-    in-partition sort, then ``mapInPandas`` folds each key's candle
-    run sequentially, carrying (prev_close, atr, rn) per key across
-    Arrow batches — the previous close lives in the fold state, so no
-    separate lag window (and no second shuffle) is needed.
+    (true ranges are), so floor and truncating division agree.  The
+    previous close lives in the fold state, so no separate lag window
+    (and no second shuffle) is needed.
     """
     if n < 1:
         raise ValueError(f"atr needs n >= 1, got {n}")
-    import numpy as np
-
     half = n // 2
-    out_schema = (
-        f"{key} string, {order_col} timestamp, rn long, tr double, atr double"
-    )
 
-    def run(batches):
-        state: dict = {}  # key -> (prev_cu, atr_u, rn)
-        for pdf in batches:
-            m = len(pdf)
-            if m == 0:
-                continue
-            ks = pdf[key].to_numpy()
-            hu = pdf["__hu"].to_numpy().tolist()
-            lu = pdf["__lu"].to_numpy().tolist()
-            cu = pdf["__cu"].to_numpy().tolist()
-            tr_a = np.empty(m, dtype=np.int64)
-            at_a = np.empty(m, dtype=np.int64)
-            rn_a = np.empty(m, dtype=np.int64)
-            cur = None
-            pc = au = rn = 0
-            for i in range(m):
-                k = ks[i]
-                if k != cur:
-                    if cur is not None:
-                        state[cur] = (pc, au, rn)
-                    cur = k
-                    pc, au, rn = state.get(k, (0, 0, 0))
-                if rn == 0:
-                    tru = hu[i] - lu[i]
-                    au = tru
-                else:
-                    tru = max(hu[i] - lu[i], abs(hu[i] - pc), abs(lu[i] - pc))
-                    au = ((n - 1) * au + tru + half) // n
-                rn += 1
-                pc = cu[i]
-                tr_a[i] = tru
-                at_a[i] = au
-                rn_a[i] = rn
-            state[cur] = (pc, au, rn)
-            out = pdf[[key, order_col]].copy()
-            out["rn"] = rn_a
-            out["tr"] = tr_a / SCALE
-            out["atr"] = at_a / SCALE
-            yield out
+    def step(st, h, l, c):
+        if st is None:
+            tr = au = h - l
+            rn = 1
+        else:
+            pc, au, rn = st
+            tr = max(h - l, abs(h - pc), abs(l - pc))
+            au, rn = ((n - 1) * au + tr + half) // n, rn + 1
+        return (c, au, rn), (rn, tr, au)
 
-    prepared = (
-        candles.filter(
-            F.col("high").isNotNull() & F.col("low").isNotNull()
-            & F.col("close").isNotNull()
-        )
-        .select(
-            F.col(key).cast("string").alias(key),
-            F.col(order_col),
-            F.round(F.col("high") * SCALE).cast("bigint").alias("__hu"),
-            F.round(F.col("low") * SCALE).cast("bigint").alias("__lu"),
-            F.round(F.col("close") * SCALE).cast("bigint").alias("__cu"),
-        )
-        .repartition(key)
-        .sortWithinPartitions(key, order_col)
+    rows = candles.filter(
+        F.col("high").isNotNull() & F.col("low").isNotNull()
+        & F.col("close").isNotNull()
+    ).select(
+        F.col(key).cast("string").alias(key),
+        F.col(order_col),
+        *[
+            F.round(F.col(c) * SCALE).cast("bigint").alias(f"__{c}")
+            for c in ("high", "low", "close")
+        ],
     )
-    return prepared.mapInPandas(run, out_schema)
+    folded = _keyed_fold(
+        rows, key, [order_col], step, ["__high", "__low", "__close"],
+        ["rn", "__tr", "__au"], keep=(order_col,),
+    )
+    return folded.select(
+        key,
+        order_col,
+        "rn",
+        (F.col("__tr") / SCALE).alias("tr"),
+        (F.col("__au") / SCALE).alias("atr"),
+    )
 
 
 def sql_atr(candles_cte: str, key: str, order_col: str, n: int = 14) -> str:
@@ -1652,7 +1590,7 @@ def sql_atr(candles_cte: str, key: str, order_col: str, n: int = 14) -> str:
       UNION ALL
       SELECT t.{key}, t.{order_col}, t.rn, t.tru,
              (({n} - 1) * w.au + t.tru + {half}) // {n}
-      FROM tr t JOIN wilder w ON t.{key} = w.{key} AND t.rn = w.rn + 1
+      FROM tr t JOIN wilder w ON t.{key} IS NOT DISTINCT FROM w.{key} AND t.rn = w.rn + 1
     )
     SELECT {key}, {order_col}, rn,
            CAST(tru AS DOUBLE) / {SCALE} AS tr,
@@ -1787,10 +1725,11 @@ def garch_vol(
     order_by: list[str],
     price: str,
 ) -> DataFrame:
-    """GARCH(1,1) conditional volatility per key — the SIXTH member
-    of the certified arbitrary-length integer-recursion family
-    (EMA/MACD, Heikin-Ashi, Holt, ATR, CUSUM): the variance state at
-    tick t depends on every prior squared return,
+    """GARCH(1,1) conditional volatility per key — the fifth
+    certified arbitrary-length integer recursion on
+    :func:`_keyed_fold` (after EMA/MACD, Heikin-Ashi, Holt and ATR):
+    the variance state at tick t depends on every prior squared
+    return,
 
         s2_t = omega + (alpha*r_t^2 + beta*s2_{t-1})
         s2_1 = r_1^2,
@@ -1805,84 +1744,38 @@ def garch_vol(
     fits BIGINT on both engines (an unclamped synthetic jump
     overflowed INT64 inside DuckDB's recursion).  The only float op
     is the final sqrt, floored to an integer vol_ppm on both
-    engines.
+    engines.  The first tick has no return and emits no row, so the
+    output is O(return rows): (key, rn, ret_ppm, var_pp2, vol_ppm)."""
 
-    Same execution shape as ema_macd: one key repartition +
-    in-partition sort, then a single mapInPandas stream carrying
-    per-key (prev_price, s2, rn) state across Arrow batches.  Output
-    is O(return rows): (key, rn, ret_ppm, var_pp2, vol_ppm)."""
-    import math
+    def step(st, p):
+        if st is None:
+            return (p, 0, 0), None
+        prev, s2, rn = st
+        r = max(-1_000_000, min(1_000_000, _tdiv((p - prev) * 1_000_000, prev)))
+        if rn == 0:
+            s2 = r * r
+        else:
+            s2 = GARCH_OMEGA_PP2 + (
+                GARCH_ALPHA_NUM * r * r + GARCH_BETA_NUM * s2 + GARCH_DENOM // 2
+            ) // GARCH_DENOM
+        return (p, s2, rn + 1), (rn + 1, r, s2)
 
-    import numpy as np
-    import pandas as pd
-
-    out_schema = (
-        f"{key} string, rn long, ret_ppm long, var_pp2 long, vol_ppm long"
-    )
     ord_names = [f"__o{i}" for i in range(len(order_by))]
-
-    def run(batches):
-        state: dict = {}
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            ks = pdf[key].to_numpy()
-            pu = pdf["__pu"].to_numpy().tolist()
-            out_k, out_rn, out_r, out_v, out_s = [], [], [], [], []
-            cur = None
-            prev = s2 = rn = 0
-            have_prev = False
-            for i in range(n):
-                k = ks[i]
-                if k != cur:
-                    if cur is not None:
-                        state[cur] = (prev, s2, rn, have_prev)
-                    cur = k
-                    prev, s2, rn, have_prev = state.get(k, (0, 0, 0, False))
-                p = int(pu[i])
-                if have_prev:
-                    r = _tdiv((p - prev) * 1_000_000, prev)
-                    r = max(-1_000_000, min(1_000_000, r))
-                    r2 = r * r
-                    if rn == 0:
-                        s2 = r2
-                    else:
-                        s2 = GARCH_OMEGA_PP2 + (
-                            GARCH_ALPHA_NUM * r2
-                            + GARCH_BETA_NUM * s2
-                            + GARCH_DENOM // 2
-                        ) // GARCH_DENOM
-                    rn += 1
-                    out_k.append(k)
-                    out_rn.append(rn)
-                    out_r.append(r)
-                    out_v.append(s2)
-                    out_s.append(int(math.sqrt(float(s2))))
-                prev = p
-                have_prev = True
-            state[cur] = (prev, s2, rn, have_prev)
-            yield pd.DataFrame(
-                {
-                    key: np.array(out_k, dtype=object),
-                    "rn": np.array(out_rn, dtype=np.int64),
-                    "ret_ppm": np.array(out_r, dtype=np.int64),
-                    "var_pp2": np.array(out_v, dtype=np.int64),
-                    "vol_ppm": np.array(out_s, dtype=np.int64),
-                }
-            )
-
-    ordered = (
-        prices.filter(F.col(price) > 0)
-        .select(
-            F.col(key).cast("string").alias(key),
-            F.round(F.col(price) * SCALE).cast("bigint").alias("__pu"),
-            *[F.col(c).alias(n) for c, n in zip(order_by, ord_names)],
-        )
-        .repartition(F.col(key))
-        .sortWithinPartitions(key, *ord_names)
+    rows = prices.filter(F.col(price) > 0).select(
+        F.col(key).cast("string").alias(key),
+        F.round(F.col(price) * SCALE).cast("bigint").alias("__pu"),
+        *[F.col(c).alias(n) for c, n in zip(order_by, ord_names)],
     )
-    return ordered.mapInPandas(run, schema=out_schema)
+    folded = _keyed_fold(
+        rows, key, ord_names, step, ["__pu"], ["rn", "ret_ppm", "var_pp2"]
+    )
+    return folded.select(
+        key,
+        "rn",
+        "ret_ppm",
+        "var_pp2",
+        F.floor(F.sqrt(F.col("var_pp2"))).cast("long").alias("vol_ppm"),
+    )
 
 
 def sql_garch_vol(
@@ -1916,7 +1809,7 @@ def sql_garch_vol(
              {GARCH_OMEGA_PP2} + ({GARCH_ALPHA_NUM} * t.r * t.r
                + {GARCH_BETA_NUM} * g.s2 + {GARCH_DENOM // 2})
                // {GARCH_DENOM}
-      FROM rets t JOIN garch g ON t.{key} = g.{key} AND t.rn = g.rn + 1
+      FROM rets t JOIN garch g ON t.{key} IS NOT DISTINCT FROM g.{key} AND t.rn = g.rn + 1
     )
     SELECT {key}, rn, r AS ret_ppm,
            CAST(s2 AS BIGINT) AS var_pp2,

@@ -107,6 +107,8 @@ def pagerank(
         materialize=True,
     )
     n = cached_count(nodes)
+    if n == 0:  # no node to rank; the uniform constants divide by n
+        return nodes.select("node", F.lit(0.0).alias("pagerank"))
     if not hint_will_fit(n):
         # The guard will drop the per-round rank broadcast: pay ONE
         # hash-partitioning of the edge list on the per-round join

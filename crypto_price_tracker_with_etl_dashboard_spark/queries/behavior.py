@@ -2373,6 +2373,8 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         trans.select(F.col("dst").alias("state"))
     ).distinct().cache()
     n = states.count()
+    if n == 0:  # no transition; the uniform start divides by n
+        return states.select("state", F.lit(0).cast("bigint").alias("mass"))
     pi = states.select(
         "state", F.lit(1_000_000 // n).cast("bigint").alias("mass")
     )

@@ -824,7 +824,7 @@ def q_prices_garch_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GARCH(1,1) conditional volatility per symbol
     (operators/indicators.py::garch_vol) — the volatility-clustering
     model a risk desk runs beside the historical-VaR tail estimate;
-    the sixth certified arbitrary-length integer recursion."""
+    the fifth certified arbitrary-length integer recursion."""
     from crypto_price_tracker_with_etl_dashboard_spark.operators.indicators import (
         garch_vol,
     )

@@ -8,8 +8,9 @@ results incrementally.
 State model (per key): the recursion state ``(ef, es, rn)`` — two
 fixed-point BIGINT EMA accumulators and the 1-based tick index.
 Each micro-batch sorts its own rows by event time and folds them
-into the state with the IDENTICAL integer recursion the batch
-operator and the DuckDB oracle use:
+into the state with the batch operator's own step function
+(``operators/indicators.py::ema_step``), the integer recursion the
+DuckDB oracle re-derives:
 
     eu_t = (2*xu_t + (n-1)*eu_{t-1} + (n+1)//2) // (n+1)
 
@@ -49,6 +50,7 @@ from pyspark.sql.types import (
 )
 
 from crypto_price_tracker_with_etl_dashboard_spark.operators.exact import SCALE
+from crypto_price_tracker_with_etl_dashboard_spark.operators.indicators import ema_step
 
 EMA_SCHEMA = StructType(
     [
@@ -71,9 +73,7 @@ EMA_STATE_SCHEMA = StructType(
 
 
 def make_ema_fn(fast: int = 12, slow: int = 26):
-    if not (1 <= fast < slow):
-        raise ValueError(f"need 1 <= fast < slow, got {fast}, {slow}")
-    hf, hs = (fast + 1) // 2, (slow + 1) // 2
+    step = ema_step(fast, slow)
 
     def fold(
         key: Tuple[Any, ...],
@@ -86,9 +86,7 @@ def make_ema_fn(fast: int = 12, slow: int = 26):
             return
         rows = []
         for i_pdf, pdf in enumerate(pdfs):
-            for i_row in range(len(pdf)):
-                t = pdf["ts"].iloc[i_row]
-                p = pdf["price"].iloc[i_row]
+            for i_row, (t, p) in enumerate(zip(pdf["ts"], pdf["price"])):
                 if pd.isna(t) or pd.isna(p):
                     continue
                 rows.append((t, i_pdf, i_row, float(p)))
@@ -98,31 +96,23 @@ def make_ema_fn(fast: int = 12, slow: int = 26):
         # (batch, row) tuple) — the batch operator's tiebreak column
         # plays this role at rest
         rows.sort(key=lambda r: (r[0], r[1], r[2]))
-        ef, es, rn = state.get if state.exists else (0, 0, 0)
-        out_ts, out_rn, out_ef, out_es = [], [], [], []
+        st = state.get if state.exists else None
+        out = []
         for t, _b, _i, p in rows:
             # HALF_UP like Spark's F.round / DuckDB round (prices are
             # nonnegative); Python round() is HALF_EVEN — not it
-            xu = int(math.floor(p * SCALE + 0.5))
-            if rn == 0:
-                ef = es = xu
-            else:
-                ef = (2 * xu + (fast - 1) * ef + hf) // (fast + 1)
-                es = (2 * xu + (slow - 1) * es + hs) // (slow + 1)
-            rn += 1
-            out_ts.append(t)
-            out_rn.append(rn)
-            out_ef.append(ef)
-            out_es.append(es)
-        state.update((ef, es, rn))
+            st, _ = step(st, int(math.floor(p * SCALE + 0.5)))
+            out.append((t, *st))
+        state.update(st)
+        ts, ef, es, rn = (list(c) for c in zip(*out))
         yield pd.DataFrame(
             {
-                "symbol": [sym] * len(out_rn),
-                "ts": out_ts,
-                "rn": out_rn,
-                "ema_fast": [v / SCALE for v in out_ef],
-                "ema_slow": [v / SCALE for v in out_es],
-                "macd": [(f - s) / SCALE for f, s in zip(out_ef, out_es)],
+                "symbol": [sym] * len(out),
+                "ts": ts,
+                "rn": rn,
+                "ema_fast": [v / SCALE for v in ef],
+                "ema_slow": [v / SCALE for v in es],
+                "macd": [(f - s) / SCALE for f, s in zip(ef, es)],
             }
         )
 

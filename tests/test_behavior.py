@@ -352,3 +352,26 @@ def test_weighted_median_lower_convention_even_total(spark, monkeypatch):
     r = out[0]
     # ceil(10/2) = 5 is reached at value 1.0 -> lower median
     assert (r["weighted_median"], r["total_weight"]) == (1.0, 10)
+
+
+def test_markov_stationary_on_empty_events_matches_duckdb(spark, tmp_path):
+    """A zero-row events table has no transition: an empty result
+    with the normal schema, as the DuckDB twin returns, not a division
+    by the state count."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from crypto_price_tracker_with_etl_dashboard_spark.queries.behavior import (
+        _markov_stationary_sql,
+        q_events_markov_stationary,
+    )
+
+    schema = pq.read_schema(f"{SF_SMALL}/events.parquet")
+    pq.write_table(schema.empty_table(), tmp_path / "events.parquet")
+    got = q_events_markov_stationary(spark, str(tmp_path))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    want = con.execute(_markov_stationary_sql())
+    assert got.collect() == want.fetchall() == []
+    assert got.columns == [d[0] for d in want.description]
+    assert [t for _, t in got.dtypes] == ["string", "bigint"]

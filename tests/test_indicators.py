@@ -501,3 +501,83 @@ def test_holt_linear_series_learns_the_slope(spark):
     last = holt_smooth(df, "k", "t", "v").orderBy("rn").collect()[-1]
     assert abs(last["trend"] - 5.0) < 0.5
     assert abs(last["forecast_next"] - (10.0 + 5.0 * 40)) < 3.0
+
+
+# ---- keyed folds: a NULL key is one key on both engines ---------------------
+
+_FOLD_COLS = ["k", "t", "i", "open", "high", "low", "close"]
+# one NULL key and one normal key, 7 ticks each (interleaved), so each
+# key's run spans several 3-row Arrow batches
+_FOLD_ROWS = [
+    (k, ts(0, i), i, c - 1.5, c + 2.25, c - 3.0, c)
+    for i in range(7)
+    for k, c in ((None, 50.0 + 3.5 * ((i * 5) % 7)), ("btc", 100.0 + 7.25 * ((i * 3) % 5)))
+]
+
+
+def _fold_cases():
+    from crypto_price_tracker_with_etl_dashboard_spark.operators import indicators as ind
+
+    candles = "candles AS (SELECT * FROM t)"
+    return {
+        "ema_macd": (
+            lambda df: ind.ema_macd(df, "k", ["t", "i"], "close", fast=3, slow=5),
+            ind.sql_ema_macd("t", "k", ["t", "i"], "close", fast=3, slow=5),
+        ),
+        "heikin_ashi": (
+            lambda df: ind.heikin_ashi(df, "k", "t"),
+            ind.sql_heikin_ashi(candles, "k", "t"),
+        ),
+        "holt_smooth": (
+            lambda df: ind.holt_smooth(df, "k", "t", "close"),
+            ind.sql_holt_smooth("series AS (SELECT k, t, close AS value FROM t)", "k", "t"),
+        ),
+        "atr": (
+            lambda df: ind.atr(df, "k", "t", n=3),
+            ind.sql_atr(candles, "k", "t", n=3),
+        ),
+        "garch_vol": (
+            lambda df: ind.garch_vol(df, "k", ["t", "i"], "close"),
+            ind.sql_garch_vol("t", "k", ["t", "i"], "close"),
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "op", ["ema_macd", "heikin_ashi", "holt_smooth", "atr", "garch_vol"]
+)
+def test_keyed_fold_null_key_matches_duckdb_across_batches(spark, op):
+    """A NULL key's recursion continues across Arrow batches and the
+    DuckDB twin folds it as one key: exact equality at 3 rows per
+    batch, both keys in one shuffle partition."""
+    import duckdb
+    import pandas as pd
+
+    fold, sql = _fold_cases()[op]
+    df = spark.createDataFrame(
+        _FOLD_ROWS,
+        "k string, t timestamp, i long, open double, high double, "
+        "low double, close double",
+    )
+    conf = {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "3",
+        "spark.sql.shuffle.partitions": "1",
+    }
+    saved = {c: spark.conf.get(c) for c in conf}
+    try:
+        for c, v in conf.items():
+            spark.conf.set(c, v)
+        got_df = fold(df)
+        got = [tuple(r) for r in got_df.collect()]
+    finally:
+        for c, v in saved.items():
+            spark.conf.set(c, v)
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame(_FOLD_ROWS, columns=_FOLD_COLS))
+    want = con.execute(f"SELECT {', '.join(got_df.columns)} FROM ({sql})").fetchall()
+
+    def order(r):
+        return (r[0] is not None, r[0] or "", r[1:])
+
+    assert len(got) == len(want) and {r[0] for r in got} == {None, "btc"}
+    assert sorted(got, key=order) == sorted(want, key=order)

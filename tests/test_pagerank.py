@@ -89,3 +89,18 @@ def test_pagerank_edge_column_named_node(spark, toy_edges, renamed):
     got = sorted(pagerank(edges, src=cols["src"], dst=cols["dst"], iters=4).collect())
     want = sorted(pagerank(toy_edges, iters=4).collect())
     assert got == want
+
+
+def test_pagerank_empty_edges_matches_duckdb(spark):
+    """No edge, no node: an empty rank table with the normal schema,
+    as the DuckDB twin returns, not a division by the node count."""
+    edges = spark.createDataFrame([], "src string, dst string, w long")
+    got = pagerank(edges, iters=4)
+    sql = sql_pagerank(
+        "edges AS (SELECT * FROM (VALUES ('a', 'b', 1)) t(src, dst, w) WHERE false)",
+        iters=4,
+    )
+    want = duckdb.sql(sql)
+    assert got.collect() == want.fetchall() == []
+    assert got.columns == want.columns
+    assert [t for _, t in got.dtypes] == ["string", "double"]

@@ -140,6 +140,21 @@ def test_count_kept_in_the_entry_and_not_on_unowned_frames(spark, registry):
         assert n == 20 and jobs >= 1
 
 
+def test_rename_only_variant_shares_the_entry(spark, registry):
+    """Plans that differ only in column names are one Spark cache
+    entry, so they are one registry entry: the second variant gets the
+    stored frame under its own names, and its count is the entry's."""
+    base = spark.range(40).selectExpr("id", "id * 3 AS v")
+    plain = sc.session_plan_cache(base.select("id", "v"), materialize=True)
+    named = sc.session_plan_cache(base.selectExpr("id AS node", "v"), materialize=True)
+    assert len(registry) == 1 and registry[0].frames == (plain,)
+    assert named.columns == ["node", "v"]
+    assert "InMemoryRelation" in named._jdf.queryExecution().withCachedData().toString()
+    assert sc.session_plan_cache(base.selectExpr("id AS node", "v")) is named
+    n, jobs = jobs_run(spark, "renamed-count", lambda: sc.cached_count(named))
+    assert (n, jobs) == (40, 0)
+
+
 def test_many_threads_keep_one_entry_per_key_and_one_hold_per_owner(registry):
     """More threads than cores, a short switch interval: every caller
     of a key gets the one stored frame, and every held frame but each
