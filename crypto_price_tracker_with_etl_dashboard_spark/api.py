@@ -39,9 +39,9 @@ from crypto_price_tracker_with_etl_dashboard_spark.operators.dashboard import (
 from crypto_price_tracker_with_etl_dashboard_spark.operators.history import history_slice
 from crypto_price_tracker_with_etl_dashboard_spark.operators.latest import latest_snapshot
 from crypto_price_tracker_with_etl_dashboard_spark.sources.ingest import (
-    append_prices,
     coingecko_rows_to_df,
     validate_and_normalize,
+    write_prices,
 )
 from crypto_price_tracker_with_etl_dashboard_spark.streaming.pipeline import run_ingest_stream
 from crypto_price_tracker_with_etl_dashboard_spark.streaming.windows import ohlc_candles
@@ -66,9 +66,10 @@ class PriceTracker:
 
         A path-backed table's schema is resolved once per tracker, on
         the first deref that succeeds, and reused: every write path
-        (``ingest_batch``, the streaming sinks) writes the same
-        (dt, batch) + event_id layout, so it cannot change.  Files are
-        listed on every deref, so batches appended since are visible.
+        (``ingest_batch``, the streaming sinks) goes through
+        ``sources/ingest.py::write_prices``, so it cannot change.
+        Files are listed on every deref, so batches appended since are
+        visible.
         """
         if isinstance(self._table, DataFrame):
             return self._table
@@ -93,10 +94,9 @@ class PriceTracker:
             coingecko_rows_to_df(self.spark, rows), ts
         ).cache()
         n = clean.count()
-        # batch id = epoch seconds of the batch timestamp: keeps the
-        # (dt, batch) layout identical to the streaming sink (see
-        # append_prices) and gives repeated polls distinct partitions.
-        append_prices(clean, self._table, batch_id=int(ts.timestamp()))
+        # batch id = epoch seconds of the batch timestamp: repeated
+        # polls get distinct partitions, and same-second polls append.
+        write_prices(clean, self._table, int(ts.timestamp()), replace=False)
         clean.unpersist()
         return n
 

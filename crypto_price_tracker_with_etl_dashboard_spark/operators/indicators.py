@@ -1761,9 +1761,12 @@ def garch_vol(
         return (p, s2, rn + 1), (rn + 1, r, s2)
 
     ord_names = [f"__o{i}" for i in range(len(order_by))]
-    rows = prices.filter(F.col(price) > 0).select(
+    # filter on the fixed-point price, the step's divisor: a price in
+    # (0, 0.00005) rounds to 0 units
+    pu = F.round(F.col(price) * SCALE)
+    rows = prices.filter(pu > 0).select(
         F.col(key).cast("string").alias(key),
-        F.round(F.col(price) * SCALE).cast("bigint").alias("__pu"),
+        pu.cast("bigint").alias("__pu"),
         *[F.col(c).alias(n) for c, n in zip(order_by, ord_names)],
     )
     folded = _keyed_fold(
@@ -1790,7 +1793,7 @@ def sql_garch_vol(
       SELECT CAST({key} AS VARCHAR) AS {key},
              CAST(round({price} * {SCALE}) AS BIGINT) AS pu,
              row_number() OVER (PARTITION BY {key} ORDER BY {ob}) AS tick
-      FROM {table} WHERE {price} > 0
+      FROM {table} WHERE round({price} * {SCALE}) > 0
     ),
     rets AS (
       SELECT {key}, tick - 1 AS rn,

@@ -1,6 +1,7 @@
 """Ingest-side operators (SURVEY.md section 2.2 P1-P3, P5; section
 2.1 S1-S3): validate / project / normalize a semi-structured batch
-into the ``prices`` schema, and append it to the fact table.
+into the ``prices`` schema, and write it to the fact table — this
+module is the only one that knows the table's on-disk layout.
 
 The reference does this row-at-a-time in Python
 (etl/crypto_etl.py:86-106); here it is a pure DataFrame -> DataFrame
@@ -57,29 +58,40 @@ def validate_and_normalize(raw: DataFrame, batch_ts: dt.datetime) -> DataFrame:
     )
 
 
-def append_prices(batch: DataFrame, table_path: str, batch_id: int = 0) -> None:
-    """S3 table sink: atomic batch append (one txn in the reference,
-    etl/crypto_etl.py:108-123; one write job here).  Partitioned by
-    ingest date so history queries prune partitions at scale — a
-    100 TB prices table is only ever scanned by (symbol, day) slices.
+def write_prices(
+    clean: DataFrame, table_path: str, batch_id: int, *, replace: bool
+) -> DataFrame:
+    """S3 table sink, the one writer of the prices-table layout: one
+    write job per batch (one txn in the reference,
+    etl/crypto_etl.py:108-123).  Returns the written frame (layout
+    columns included) for the push path's snapshot merge.
 
-    Layout matches the streaming sink (streaming/pipeline.py:
-    partition (dt, batch), event_id column): the two facade write
-    paths MUST agree — mixed dt-only and dt/batch directories make
-    Spark's partition discovery fail outright, and a table without
-    event_id loses the keep-last tiebreak (P5 stamps one
-    batch-constant timestamp, so same-symbol duplicates within a
-    poll tie on timestamp alone and the winner goes
-    partition-order-nondeterministic).
+    Layout: partitioned by (dt = ingest date, batch = ``batch_id``),
+    plus an ``event_id`` column.  ``dt`` lets history queries prune to
+    (symbol, day) slices; ``event_id`` is the keep-last tiebreak (P5
+    stamps one batch-constant timestamp, so same-symbol duplicates
+    within a poll tie on timestamp alone).  Every writer goes through
+    here: mixed dt-only and dt/batch directories make Spark's
+    partition discovery fail outright.
+
+    ``replace=True`` is a dynamic partition overwrite: a replayed
+    stream batch replaces its own earlier (possibly partial) output,
+    so at-least-once foreachBatch delivery gives exactly-once table
+    contents.  ``replace=False`` appends, so two polls that share a
+    ``batch_id`` both keep their rows.
     """
-    (
-        batch.withColumn("dt", F.to_date("timestamp"))
+    out = (
+        clean.withColumn("dt", F.to_date("timestamp"))
         .withColumn("batch", F.lit(batch_id))
         .withColumn("event_id", F.monotonically_increasing_id())
-        .write.mode("append")
-        .partitionBy("dt", "batch")
-        .parquet(table_path)
     )
+    writer = out.write.partitionBy("dt", "batch")
+    if replace:
+        writer = writer.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    else:
+        writer = writer.mode("append")
+    writer.parquet(table_path)
+    return out
 
 
 def fetch_coingecko(url: str = "https://api.coingecko.com/api/v3/coins/markets", timeout: int = 10):

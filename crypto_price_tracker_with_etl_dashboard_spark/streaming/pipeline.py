@@ -4,8 +4,8 @@ broadcast loop (etl/crypto_etl.py:138-157 + api/server.js:166-193)
 becomes ONE streaming query:
 
     raw micro-batch --foreachBatch--> validate/normalize
-                                   -> append to prices table
-                                   -> recompute latest snapshot
+                                   -> write to prices table
+                                   -> fold into the latest snapshot
                                    -> push_fn(snapshot rows)
 
 Delivery semantics: the reference is at-most-once (a failed fetch or
@@ -36,7 +36,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from crypto_price_tracker_with_etl_dashboard_spark.schema import COINGECKO_RAW_SCHEMA
-from crypto_price_tracker_with_etl_dashboard_spark.sources.ingest import validate_and_normalize
+from crypto_price_tracker_with_etl_dashboard_spark.sources.ingest import (
+    validate_and_normalize,
+    write_prices,
+)
 from crypto_price_tracker_with_etl_dashboard_spark.operators.latest import latest_snapshot
 
 
@@ -182,6 +185,16 @@ class _IncrementalSnapshot:
         return self.rows
 
 
+# The deterministic batch clock of both streams: batch (or tick) n is
+# stamped _EPOCH + n x step, so a replayed batch rewrites exactly the
+# (dt, batch) partition it wrote before.
+_EPOCH = dt.datetime(2024, 1, 1)
+
+
+def _clock(step_seconds: int) -> Callable[[int], dt.datetime]:
+    return lambda n: _EPOCH + dt.timedelta(seconds=step_seconds * n)
+
+
 def wall_clock_batch_ts(batch_id: int) -> dt.datetime:
     """Reference-parity batch timestamps: one wall-clock stamp per
     micro-batch, exactly the reference's ingest-time semantics
@@ -198,6 +211,70 @@ def wall_clock_batch_ts(batch_id: int) -> dt.datetime:
     return dt.datetime.now()
 
 
+def _write_tick(
+    spark: SparkSession,
+    raw: DataFrame,
+    batch_ts: dt.datetime,
+    batch_id: int,
+    table_path: str,
+    snapshot: Optional[_IncrementalSnapshot],
+) -> Optional[list]:
+    """One ETL tick, the body both streams run: validate/normalize with
+    the batch-constant timestamp -> idempotent (dt, batch) overwrite
+    -> fold into ``snapshot``.  Returns the rows to push, or None when
+    there is no snapshot (nothing is pushed)."""
+    clean = validate_and_normalize(raw, batch_ts)
+    out = write_prices(clean, table_path, batch_id, replace=True)
+    return None if snapshot is None else snapshot.merge(spark, table_path, out)
+
+
+def _start_etl(
+    spark: SparkSession,
+    stream: DataFrame,
+    label: str,
+    ticks: Callable[[DataFrame, int], list],
+    table_path: str,
+    checkpoint_dir: str,
+    push_fn: Optional[Callable[[list], None]],
+    snapshot: Optional[_IncrementalSnapshot],
+    trigger_seconds: Optional[int],
+    drain: bool,
+) -> StreamingQuery:
+    """Start ``stream`` on the shared foreachBatch body: the
+    (raw, batch_ts, batch_id) ticks that ``ticks(batch_df, batch_id)``
+    returns each run through :func:`_write_tick` in order, then ONE
+    push of the merged snapshot per micro-batch.  Triggers every
+    ``trigger_seconds``; without it, ``drain`` runs what is available
+    and stops, else micro-batches run back to back.
+
+    A failing micro-batch is skipped and the query keeps running (T7:
+    the reference rolls the batch back and keeps looping), unless it
+    failed because the query is stopping (``_is_cancellation``)."""
+    if push_fn is None:
+        snapshot = None  # nothing to push: skip the merge's jobs
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        try:
+            rows = None
+            for raw, batch_ts, batch in ticks(batch_df, batch_id):
+                rows = _write_tick(spark, raw, batch_ts, batch, table_path, snapshot)
+            if rows is not None:
+                push_fn(rows)
+        except Exception as exc:
+            if _is_cancellation(exc, spark):
+                raise  # stopping query: let Spark leave the batch uncommitted
+            print(f"[{label}] batch {batch_id} failed, skipping: {exc}")  # T7
+
+    writer = stream.writeStream.foreachBatch(process_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if trigger_seconds:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    elif drain:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def run_ingest_stream(
     spark: SparkSession,
     raw_dir: str,
@@ -209,15 +286,14 @@ def run_ingest_stream(
     snapshot_state: Optional[_IncrementalSnapshot] = None,
 ) -> StreamingQuery:
     """Start the ETL stream: watch ``raw_dir`` for new raw batch
-    files, validate/normalize each micro-batch with a batch-constant
-    timestamp, append to the partitioned prices table, then push the
-    incrementally-maintained latest snapshot (``snapshot_state``
-    injects the state holder — tests use it to pin the full-read
-    count; the default builds a fresh one per run).
-
-    A malformed batch must not kill the pipeline (reference behavior
-    T7: rollback the batch, keep looping) — the foreachBatch body
-    isolates per-batch failures.
+    files; each micro-batch is one tick (its batch id is the table's
+    ``batch``), validated/normalized with a batch-constant timestamp,
+    written to the partitioned prices table, then the
+    incrementally-maintained latest snapshot is pushed
+    (``snapshot_state`` injects the state holder — tests use it to pin
+    the full-read count; the default builds a fresh one per run).
+    Without ``trigger_seconds`` the stream processes what is there
+    and stops.
 
     ``batch_ts_fn`` maps batch_id -> the batch-constant timestamp
     (P5).  The default derives it deterministically from batch_id
@@ -237,73 +313,13 @@ def run_ingest_stream(
         .option("maxFilesPerTrigger", 1)
         .parquet(raw_dir)
     )
-
-    epoch = dt.datetime(2024, 1, 1)
-    step = trigger_seconds or 300
-    if batch_ts_fn is None:
-        batch_ts_fn = lambda batch_id: epoch + dt.timedelta(seconds=step * batch_id)  # noqa: E731
-    snapshot = snapshot_state if snapshot_state is not None else _IncrementalSnapshot()
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            clean = validate_and_normalize(batch_df, batch_ts_fn(batch_id))
-            out = (
-                clean.withColumn("dt", F.to_date("timestamp"))
-                .withColumn("batch", F.lit(batch_id))
-                .withColumn("event_id", F.monotonically_increasing_id())
-            )
-            # Idempotent sink: foreachBatch is at-least-once, so a
-            # replayed batch must REPLACE its own previous (possibly
-            # partial) output, not append next to it.  Dynamic
-            # partition overwrite keyed by batch_id rewrites exactly
-            # the partitions this batch owns — exactly-once to the
-            # table without a transaction log.
-            (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("dt", "batch")
-                .parquet(table_path)
-            )
-            if push_fn is not None:
-                push_fn(snapshot.merge(spark, table_path, out))
-        except Exception as exc:
-            if _is_cancellation(exc, spark):
-                raise  # stopping query: let Spark leave the batch uncommitted
-            print(f"[ingest] batch {batch_id} failed, skipping: {exc}")  # T7
-
-    writer = raw_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def streaming_snapshot_query(
-    spark: SparkSession,
-    prices_stream: DataFrame,
-    query_name: str = "latest_snapshot_stream",
-) -> StreamingQuery:
-    """Pure-streaming alternative for the snapshot: stateful
-    max_by aggregation in COMPLETE output mode over the prices
-    stream — the J1 greatest-per-group as incremental state, with
-    the full ≤|symbols|-row snapshot re-emitted per trigger (the
-    reference's T3 full-snapshot re-emit semantic; update mode would
-    emit only changed symbols).  Memory sink for tests; swap format
-    for delivery."""
-    agg = prices_stream.groupBy("symbol").agg(
-        F.max_by(
-            F.struct("name", "current_price", "market_cap", "total_volume", "timestamp"),
-            "timestamp",
-        ).alias("s")
-    ).select("symbol", "s.*")
-    return (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
+    stamp = batch_ts_fn or _clock(trigger_seconds or 300)
+    return _start_etl(
+        spark, raw_stream, "ingest",
+        lambda batch_df, batch_id: [(batch_df, stamp(batch_id), batch_id)],
+        table_path, checkpoint_dir, push_fn,
+        snapshot_state if snapshot_state is not None else _IncrementalSnapshot(),
+        trigger_seconds, drain=True,
     )
 
 
@@ -316,8 +332,10 @@ def run_feed_stream(
     trigger_seconds: Optional[int] = None,
 ) -> StreamingQuery:
     """The same ETL loop driven by the ``market_feed`` custom
-    DataSource (sources/market_feed.py) instead of a file drop:
-    poll tick -> validate/normalize -> append -> snapshot push.
+    DataSource (sources/market_feed.py) instead of a file drop.  A
+    micro-batch may hold several poll ticks: each is written as its
+    own batch (the tick number is its batch id), and the snapshot is
+    pushed once, after the last.
 
     The batch timestamp derives from the tick number (epoch +
     tick x 5 min), not wall clock — deterministic replay across
@@ -333,55 +351,13 @@ def run_feed_stream(
     reader = spark.readStream.format("market_feed")
     for k, v in (feed_options or {}).items():
         reader = reader.option(k, v)
-    feed = reader.load()
+    stamp = _clock(300)
 
-    epoch = dt.datetime(2024, 1, 1)
-    snapshot = _IncrementalSnapshot()
+    def ticks(batch_df: DataFrame, batch_id: int) -> list:
+        found = sorted(r["tick"] for r in batch_df.select("tick").distinct().collect())
+        return [(batch_df.filter(F.col("tick") == t), stamp(t), int(t)) for t in found]
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            ticks = [r["tick"] for r in batch_df.select("tick").distinct().collect()]
-            rows = None
-            for tick in sorted(ticks):
-                batch_ts = epoch + dt.timedelta(seconds=300 * tick)
-                clean = validate_and_normalize(
-                    batch_df.filter(F.col("tick") == tick).select(
-                        "symbol", "name", "current_price", "market_cap", "total_volume"
-                    ),
-                    batch_ts,
-                )
-                # Idempotent per-tick sink (see run_ingest_stream):
-                # replaying a tick overwrites its own partition, so
-                # at-least-once replay yields exactly-once contents.
-                # Unified table layout: ALL write paths (this feed
-                # loop, run_ingest_stream, and the facade's batch
-                # append) partition by (dt, batch) — the tick number
-                # IS this path's batch id.  Divergent partition
-                # schemes under one table root make Spark's partition
-                # discovery fail outright.
-                out = (
-                    clean.withColumn("dt", F.to_date("timestamp"))
-                    .withColumn("batch", F.lit(int(tick)))
-                    .withColumn("event_id", F.monotonically_increasing_id())
-                )
-                (
-                    out.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("dt", "batch")
-                    .parquet(table_path)
-                )
-                if push_fn is not None:
-                    rows = snapshot.merge(spark, table_path, out)
-            if push_fn is not None and rows is not None:
-                push_fn(rows)
-        except Exception as exc:
-            if _is_cancellation(exc, spark):
-                raise  # stopping query: let Spark leave the batch uncommitted
-            print(f"[feed] batch {batch_id} failed, skipping: {exc}")  # T7
-
-    writer = feed.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _start_etl(
+        spark, reader.load(), "feed", ticks, table_path, checkpoint_dir, push_fn,
+        _IncrementalSnapshot(), trigger_seconds, drain=False,
     )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -581,3 +581,29 @@ def test_keyed_fold_null_key_matches_duckdb_across_batches(spark, op):
 
     assert len(got) == len(want) and {r[0] for r in got} == {None, "btc"}
     assert sorted(got, key=order) == sorted(want, key=order)
+
+
+def test_garch_sub_unit_price_matches_duckdb(spark):
+    """A positive price under half a fixed-point unit (0.00004 rounds
+    to 0 units) is filtered on both engines instead of becoming a
+    zero divisor: the fold emits the one return of 0.0012 -> 0.0013,
+    as the DuckDB twin does."""
+    import duckdb
+    import pandas as pd
+
+    from crypto_price_tracker_with_etl_dashboard_spark.operators.indicators import (
+        garch_vol,
+        sql_garch_vol,
+    )
+
+    rows = [("a", ts(0, i), i, p) for i, p in enumerate((0.00004, 0.0012, 0.0013))]
+    got_df = garch_vol(
+        spark.createDataFrame(rows, "k string, t timestamp, i long, close double"),
+        "k", ["t", "i"], "close",
+    )
+    got = sorted(tuple(r) for r in got_df.collect())
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame(rows, columns=["k", "t", "i", "close"]))
+    sql = sql_garch_vol("t", "k", ["t", "i"], "close")
+    want = sorted(con.execute(f"SELECT {', '.join(got_df.columns)} FROM ({sql})").fetchall())
+    assert got == want == [("a", 1, 83333, 83333 ** 2, 83333)]

@@ -76,6 +76,71 @@ def test_batch_and_stream_write_layouts_agree(spark, tmp_path):
     assert latest["current_price"] == 2.0
 
 
+def test_same_second_polls_both_keep_their_rows(spark, tmp_path):
+    """``ingest_batch`` appends: two polls stamped with the same
+    ``batch_ts`` share one (dt, batch) partition and keep all rows."""
+    from crypto_price_tracker_with_etl_dashboard_spark.api import PriceTracker
+
+    table = str(tmp_path / "prices")
+    tr = PriceTracker(spark, table)
+    ts = dt.datetime(2024, 1, 1, 12, 0, 0)
+    assert tr.ingest_batch(RAW, batch_ts=ts) == 2
+    assert tr.ingest_batch(RAW, batch_ts=ts) == 2
+    stored = spark.read.parquet(table)
+    assert stored.count() == 4
+    assert stored.select("dt", "batch").distinct().count() == 1
+
+
+def test_replace_write_rewrites_its_own_partition(spark, tmp_path):
+    """``write_prices(replace=True)`` (the streams' sink) overwrites
+    only the (dt, batch) partition it writes: a replayed batch leaves
+    one copy, and other batches stay."""
+    from crypto_price_tracker_with_etl_dashboard_spark.sources.ingest import write_prices
+
+    table = str(tmp_path / "prices")
+    clean = validate_and_normalize(coingecko_rows_to_df(spark, RAW), BATCH_TS)
+    for batch_id in (7, 8, 7):
+        out = write_prices(clean, table, batch_id, replace=True)
+    assert {"dt", "batch", "event_id"} <= set(out.columns)
+    stored = spark.read.parquet(table)
+    assert sorted(r["batch"] for r in stored.collect()) == [7, 7, 8, 8]
+
+
+# one (regex, what) per piece of the prices-table layout
+_LAYOUT = {
+    r"partitionBy\(\s*[\"']dt[\"']\s*,\s*[\"']batch[\"']": "partitionBy(dt, batch)",
+    r"partitionOverwriteMode": "partitionOverwriteMode",
+    r"[\"']event_id[\"']\s*,\s*F\.monotonically_increasing_id\(": "event_id stamp",
+}
+
+
+def test_table_layout_is_written_in_one_place():
+    """Census: only ``sources/ingest.py::write_prices`` spells out the
+    prices-table layout, so every write path (``ingest_batch`` and
+    both streams) writes the same one."""
+    import os
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "crypto_price_tracker_with_etl_dashboard_spark",
+    )
+    found = {what: {} for what in _LAYOUT.values()}
+    for root, _, files in os.walk(pkg):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as f:
+                text = f.read()
+            for pattern, what in _LAYOUT.items():
+                n = len(re.findall(pattern, text))
+                if n:
+                    found[what][os.path.relpath(path, pkg)] = n
+    want = {"sources/ingest.py": 1}
+    assert found == {what: want for what in _LAYOUT.values()}
+
+
 def test_load_table_does_not_leak_nanos_conf(spark):
     from crypto_price_tracker_with_etl_dashboard_spark.sources import load_table
     from tests.conftest import SF_SMALL

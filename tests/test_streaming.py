@@ -1,6 +1,6 @@
 """Streaming pipeline tests (SURVEY.md section 5.4): micro-batch
 ingest through foreachBatch, snapshot monotonicity, failed-batch
-isolation, and the pure-streaming stateful snapshot."""
+isolation, and the stateful streaming operators."""
 
 from __future__ import annotations
 
@@ -154,6 +154,45 @@ def test_push_merge_orders_on_driver(spark, tmp_path):
     assert Counter(warm) == Counter(snapshot_for_push(spark.read.parquet(table)).collect())
 
 
+def test_write_tick_jobs(spark, tmp_path):
+    """The ETL tick body both streams run: validate -> one overwrite
+    write job -> snapshot merge.  A seed tick runs 4 jobs (write,
+    schema inference, the window's two) and a warm tick 3 (write, the
+    window's two), as the per-stream inline bodies did; without a
+    snapshot a tick is the write alone."""
+    import datetime as dt
+
+    from crypto_price_tracker_with_etl_dashboard_spark.streaming.pipeline import (
+        _IncrementalSnapshot,
+        _write_tick,
+    )
+    from tests.conftest import jobs_run
+
+    table = str(tmp_path / "prices")
+    t0 = dt.datetime(2024, 1, 1)
+    state = _IncrementalSnapshot()
+
+    def tick(rows, batch_id, snapshot):
+        raw = spark.createDataFrame(rows, COINGECKO_RAW_SCHEMA)
+        ts = t0 + dt.timedelta(minutes=5 * batch_id)
+        return jobs_run(
+            spark, f"tick-{batch_id}",
+            lambda: _write_tick(spark, raw, ts, batch_id, table, snapshot),
+        )
+
+    seed, jobs = tick(BATCH1, 0, state)
+    assert jobs == 4 and [r["symbol"] for r in seed] == ["btc", "eth"]
+    warm, jobs = tick(BATCH2, 1, state)
+    assert jobs == 3 and state.full_reads == 1
+    assert {r["symbol"]: r["current_price"] for r in warm} == {
+        "btc": 110.0, "eth": 50.0, "sol": 20.0,
+    }
+    assert tick(BATCH2, 2, None) == (None, 1)
+    stored = spark.read.parquet(table)
+    assert sorted(r["batch"] for r in stored.select("batch").distinct().collect()) == [0, 1, 2]
+    assert stored.count() == 6
+
+
 def test_multi_batch_push_within_one_run(spark, tmp_path):
     """Two raw files -> two micro-batches in ONE stream run: the
     second push exercises the warm incremental merge (no reseed) and
@@ -198,35 +237,6 @@ def test_failed_push_does_not_kill_stream(spark, tmp_path):
     # The append ran before the push failed (at-most-once per batch,
     # reference parity T7)
     assert spark.read.parquet(table).count() == 2
-
-
-def test_stateful_snapshot_stream(spark, tmp_path):
-    """Pure-streaming J1: stateful max_by in complete mode over a
-    file stream of prices rows."""
-    from crypto_price_tracker_with_etl_dashboard_spark.streaming.pipeline import (
-        streaming_snapshot_query,
-    )
-    from crypto_price_tracker_with_etl_dashboard_spark.schema import PRICES_SCHEMA
-    import datetime as dt
-
-    pdir = str(tmp_path / "prices_stream")
-    rows1 = [
-        ("btc", "Bitcoin", 100.0, 1e9, 1e6, dt.datetime(2024, 1, 1, 0, 0)),
-        ("eth", "Ethereum", 50.0, 5e8, 1e5, dt.datetime(2024, 1, 1, 0, 0)),
-    ]
-    rows2 = [("btc", "Bitcoin", 120.0, 1.2e9, 1e6, dt.datetime(2024, 1, 2, 0, 0))]
-    spark.createDataFrame(rows1, PRICES_SCHEMA).write.mode("append").parquet(pdir)
-    stream = spark.readStream.schema(PRICES_SCHEMA).parquet(pdir)
-    q = streaming_snapshot_query(spark, stream, query_name="snap_test")
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(rows2, PRICES_SCHEMA).write.mode("append").parquet(pdir)
-        q.processAllAvailable()
-        snap = {r["symbol"]: r for r in spark.sql("SELECT * FROM snap_test").collect()}
-        assert snap["btc"]["current_price"] == 120.0
-        assert snap["eth"]["current_price"] == 50.0
-    finally:
-        q.stop()
 
 
 def test_streaming_sessionize_closes_on_gap(spark, tmp_path):
