@@ -19,7 +19,9 @@ A user of the reference interacts with exactly these operations
 Each method returns a DataFrame (lazy plan) — callers decide whether
 to collect, stream, or write.  The fact table can be a directory of
 date-partitioned parquet (production shape) or any prices-schema
-DataFrame (tests, derived views).
+DataFrame (tests, derived views).  On a directory, every write also
+keeps the latest-per-symbol snapshot file, and the snapshot-shaped
+reads serve it while it is current (sources/ingest.py).
 """
 
 from __future__ import annotations
@@ -28,6 +30,7 @@ import datetime as dt
 from typing import Callable, Iterable, Mapping, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
@@ -38,12 +41,18 @@ from crypto_price_tracker_with_etl_dashboard_spark.operators.dashboard import (
 )
 from crypto_price_tracker_with_etl_dashboard_spark.operators.history import history_slice
 from crypto_price_tracker_with_etl_dashboard_spark.operators.latest import latest_snapshot
+from crypto_price_tracker_with_etl_dashboard_spark.schema import PRICES_SCHEMA
 from crypto_price_tracker_with_etl_dashboard_spark.sources.ingest import (
     coingecko_rows_to_df,
+    current_snapshot,
+    mark_snapshot_stale,
     validate_and_normalize,
     write_prices,
 )
-from crypto_price_tracker_with_etl_dashboard_spark.streaming.pipeline import run_ingest_stream
+from crypto_price_tracker_with_etl_dashboard_spark.streaming.pipeline import (
+    _IncrementalSnapshot,
+    run_ingest_stream,
+)
 from crypto_price_tracker_with_etl_dashboard_spark.streaming.windows import ohlc_candles
 
 
@@ -59,6 +68,8 @@ class PriceTracker:
         self.spark = spark
         self._table = table
         self._schema: Optional[StructType] = None
+        # the latest rows this tracker's ingest_batch wrote through
+        self._written = _IncrementalSnapshot()
 
     @property
     def prices(self) -> DataFrame:
@@ -86,19 +97,33 @@ class PriceTracker:
     ) -> int:
         """One ETL tick: list[dict] (the JSON a poll returns) ->
         validate/normalize with a batch-constant timestamp -> atomic
-        append.  Returns rows written.  Requires a path-backed table."""
+        append -> the snapshot file, as a stream tick keeps it.
+        Returns rows written.  Requires a path-backed table."""
         if isinstance(self._table, DataFrame):
             raise ValueError("ingest_batch needs a path-backed prices table")
         ts = batch_ts or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
         clean = validate_and_normalize(
             coingecko_rows_to_df(self.spark, rows), ts
         ).cache()
-        n = clean.count()
-        # batch id = epoch seconds of the batch timestamp: repeated
-        # polls get distinct partitions, and same-second polls append.
-        write_prices(clean, self._table, int(ts.timestamp()), replace=False)
+        # A poll is driver-sized (``rows`` arrive on the driver): collected in
+        # partition order, its rows are in the event_id order the write
+        # stamps, so the snapshot folds them without another job.
+        polled = clean.collect()
+
+        def append() -> None:
+            # batch id = epoch seconds of the batch timestamp: repeated
+            # polls get distinct partitions, and same-second polls
+            # append -- into the newest leaf, or below it for a
+            # backdated batch_ts, so the snapshot is marked stale first.
+            mark_snapshot_stale(self._table)
+            write_prices(clean, self._table, int(ts.timestamp()), replace=False)
+
+        # An empty poll writes nothing: on a table without files yet the
+        # snapshot seed would have no table to read.
+        if polled:
+            self._written.write_through(self.spark, self._table, polled, append)
         clean.unpersist()
-        return n
+        return len(polled)
 
     def start_stream(
         self,
@@ -118,12 +143,30 @@ class PriceTracker:
 
     # ---- read path (API tier) --------------------------------------------
 
+    def _snapshot(self) -> Optional[DataFrame]:
+        """The snapshot file the write path keeps, when it is current
+        (sources/ingest.py::current_snapshot): <= |symbols| rows, one
+        file, no listing of the table's partitions.  None otherwise,
+        and for a DataFrame-backed tracker: the reads then run the
+        window over the whole history."""
+        if isinstance(self._table, DataFrame):
+            return None
+        path = current_snapshot(self._table)
+        return None if path is None else self.spark.read.schema(PRICES_SCHEMA).parquet(path)
+
     def latest(self, order_by_cap: bool = True) -> DataFrame:
         """GET /api/crypto: one row per symbol at its max timestamp,
         ordered by market cap desc (NULLS FIRST, matching PG).  The
         dashboard rollups pass ``order_by_cap=False``: their own
         aggregations destroy row order, so the global sort exchange
         would be paid and thrown away."""
+        snap = self._snapshot()
+        if snap is not None:
+            # one file, so one partition: the sort needs no exchange
+            return (
+                snap.coalesce(1).sortWithinPartitions(F.col("market_cap").desc_nulls_first())
+                if order_by_cap else snap
+            )
         prices = self.prices
         tiebreak = "event_id" if "event_id" in prices.columns else None
         return latest_snapshot(prices, tiebreaker=tiebreak, order_by_cap=order_by_cap)
@@ -149,7 +192,12 @@ class PriceTracker:
         return market_share(self.latest(order_by_cap=False), k)
 
     def symbols(self) -> DataFrame:
-        """Distinct symbols, lexicographic — the dropdown list."""
+        """Distinct symbols, lexicographic — the dropdown list.  The
+        snapshot holds one row per symbol, so its symbol column is
+        already distinct."""
+        snap = self._snapshot()
+        if snap is not None:
+            return snap.select("symbol").coalesce(1).sortWithinPartitions("symbol")
         return distinct_symbols(self.prices)
 
     # ---- extensions -------------------------------------------------------

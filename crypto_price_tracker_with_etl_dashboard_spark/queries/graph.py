@@ -943,7 +943,10 @@ def q_trade_degree_ccdf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "threshold",
             "n_suppliers",
             "n_at_least",
-            F.expr("n_at_least * 1000000 div n_suppliers").alias("ccdf_ppm"),
+            # no supplier, no ratio: NULL, as the twin's integer division by 0
+            F.expr(
+                "CASE WHEN n_suppliers > 0 THEN n_at_least * 1000000 div n_suppliers END"
+            ).alias("ccdf_ppm"),
         )
         .orderBy("threshold")
     )
@@ -955,8 +958,8 @@ def _degree_ccdf_sql() -> str:
         selects.append(
             f"""
       SELECT CAST({t} AS BIGINT) AS threshold,
-             CAST(SUM(CASE WHEN degree >= {t} THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_at_least
+             CAST(COALESCE(SUM(CASE WHEN degree >= {t} THEN 1 ELSE 0 END), 0)
+                  AS BIGINT) AS n_at_least
       FROM deg"""
         )
     union = "\n      UNION ALL\n".join(selects)

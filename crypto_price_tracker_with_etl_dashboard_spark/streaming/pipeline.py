@@ -6,6 +6,7 @@ becomes ONE streaming query:
     raw micro-batch --foreachBatch--> validate/normalize
                                    -> write to prices table
                                    -> fold into the latest snapshot
+                                   -> store it as the snapshot file
                                    -> push_fn(snapshot rows)
 
 Delivery semantics: the reference is at-most-once (a failed fetch or
@@ -29,7 +30,7 @@ pipeline runs off any streaming source (kafka/rate/custom) — only
 from __future__ import annotations
 
 import datetime as dt
-from typing import Callable, Optional
+from typing import Callable, Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,8 +38,13 @@ from pyspark.sql.streaming import StreamingQuery
 
 from crypto_price_tracker_with_etl_dashboard_spark.schema import COINGECKO_RAW_SCHEMA
 from crypto_price_tracker_with_etl_dashboard_spark.sources.ingest import (
+    current_snapshot,
+    epoch_micros,
+    mark_snapshot_stale,
+    stamp_prices,
     validate_and_normalize,
     write_prices,
+    write_snapshot,
 )
 from crypto_price_tracker_with_etl_dashboard_spark.operators.latest import latest_snapshot
 
@@ -139,17 +145,30 @@ class _IncrementalSnapshot:
     size.
 
     Correctness: within a batch, ties on the batch-constant timestamp
-    are resolved by ``latest_snapshot`` over the batch itself (same
-    event_id tiebreak as a full recompute); across batches timestamps
-    strictly increase, so newest-timestamp-wins merging reproduces
-    the full-table latest_snapshot exactly."""
+    are resolved by the batch's event_id order (same keep-last as a
+    full recompute); across batches the newest instant wins.  Two
+    batches that tie on the timestamp (same-second polls) are ordered
+    only by the event_ids the table holds, which the fold does not
+    see, so such a batch reseeds from the table instead.  The fold
+    thus reproduces the full-table latest_snapshot exactly.
+
+    :meth:`write_through` also stores the rows as the table's snapshot
+    file (sources/ingest.py::write_snapshot), which the API reads
+    instead of the whole history.  Before each write it checks that the
+    current file is still the one these rows were stored as; any other
+    write since (an ``ingest_batch``, an older-partition write, another
+    stream) makes it reseed, so none is silently missed."""
 
     def __init__(self) -> None:
         self.rows: Optional[list] = None
+        # the snapshot file ``rows`` were last stored as; None before
+        # the first store, and for a table that keeps no file
+        self.path: Optional[str] = None
         # full-table reads performed (observability + test pin): must
         # stay at 1 for the lifetime of a stream run — the one-time
-        # cold-start/restart seed.  Anything higher means the warm
-        # path regressed to the unbounded per-trigger history scan.
+        # cold-start/restart seed — unless another writer wrote in
+        # between or two batches tied on the timestamp.  Anything higher means the warm path regressed to
+        # the unbounded per-trigger history scan.
         self.full_reads: int = 0
 
     @staticmethod
@@ -165,23 +184,64 @@ class _IncrementalSnapshot:
     def _latest_rows(prices: DataFrame) -> list:
         return latest_snapshot(prices, tiebreaker="event_id", order_by_cap=False).collect()
 
-    def merge(self, spark: SparkSession, table_path: str, batch_clean: DataFrame) -> list:
-        """Fold one written batch into the snapshot; returns the rows
-        to push (cap-descending, NULLs first).  Spark computes the
-        unordered snapshot rows; the driver orders every push, seed
-        and warm alike, with ``_cap_order``."""
+    def _fold(self, batch: Union[DataFrame, list]) -> Optional[list]:
+        """The held rows with ``batch``'s latest rows folded in
+        (cap-descending, NULLs first), or None when the fold cannot
+        give the table's answer: no rows held, or a cross-write tie.
+        ``batch`` is the stamped batch frame, whose latest rows Spark
+        computes, or the batch's rows on the driver in event_id order,
+        whose last row per symbol is its latest.  Changes no state."""
         if self.rows is None:
-            # cold start / restart: one full read seeds state (the
-            # just-written batch is already in the table)
-            self.full_reads += 1
-            self.rows = self._cap_order(self._latest_rows(spark.read.parquet(table_path)))
-            return self.rows
+            return None
         by_symbol = {r["symbol"]: r for r in self.rows}
-        for r in self._latest_rows(batch_clean):
+        latest = (
+            self._latest_rows(batch) if isinstance(batch, DataFrame)
+            else {r["symbol"]: r for r in batch}.values()
+        )
+        for r in latest:
             prev = by_symbol.get(r["symbol"])
-            if prev is None or r["timestamp"] >= prev["timestamp"]:
+            new = epoch_micros(r["timestamp"])
+            old = None if prev is None else epoch_micros(prev["timestamp"])
+            if new == old:
+                return None  # a tie across two writes: reseed
+            if old is None or new > old:
                 by_symbol[r["symbol"]] = r
-        self.rows = self._cap_order(list(by_symbol.values()))
+        return self._cap_order(list(by_symbol.values()))
+
+    def _seed(self, spark: SparkSession, table_path: str) -> list:
+        # cold start / restart / cross-batch tie: one full read seeds
+        # state (the batch must already be in the table)
+        self.full_reads += 1
+        return self._cap_order(self._latest_rows(spark.read.parquet(table_path)))
+
+    def merge(self, spark: SparkSession, table_path: str, batch: Union[DataFrame, list]) -> list:
+        """Fold one written batch into the snapshot (see :meth:`_fold`),
+        or reseed from the table; returns the rows to push.  The driver
+        orders every push, seed and warm alike, with ``_cap_order``."""
+        rows = self._fold(batch)
+        self.rows = self._seed(spark, table_path) if rows is None else rows
+        return self.rows
+
+    def write_through(
+        self, spark: SparkSession, table_path: str,
+        batch: Union[DataFrame, list], write: Callable[[], object],
+    ) -> list:
+        """Fold ``batch`` in (see :meth:`merge`), ``write()`` it to the
+        table and store the result as the snapshot file; returns the
+        rows to push.  The fold runs before the write, so only the file
+        write separates the table's commit from a current snapshot and
+        readers rarely find it stale.  The held rows are built on only
+        when the snapshot was current, and theirs, before the write;
+        otherwise the rows are reseeded after the write, and the file
+        is marked stale before it, as the write might land at or below
+        the newest leaf."""
+        if current_snapshot(table_path) != self.path:
+            self.rows = None
+            mark_snapshot_stale(table_path)
+        rows = self._fold(batch)
+        write()
+        self.rows = self._seed(spark, table_path) if rows is None else rows
+        self.path = write_snapshot(table_path, self.rows)
         return self.rows
 
 
@@ -221,11 +281,22 @@ def _write_tick(
 ) -> Optional[list]:
     """One ETL tick, the body both streams run: validate/normalize with
     the batch-constant timestamp -> idempotent (dt, batch) overwrite
-    -> fold into ``snapshot``.  Returns the rows to push, or None when
-    there is no snapshot (nothing is pushed)."""
+    -> fold into ``snapshot`` and store it as the snapshot file.
+    Returns the rows to push, or None when there is no snapshot
+    (nothing is pushed)."""
     clean = validate_and_normalize(raw, batch_ts)
-    out = write_prices(clean, table_path, batch_id, replace=True)
-    return None if snapshot is None else snapshot.merge(spark, table_path, out)
+
+    def write() -> DataFrame:
+        return write_prices(clean, table_path, batch_id, replace=True)
+
+    if snapshot is None:
+        # keeps no snapshot: a tick at or below the newest leaf (a
+        # restart's replay, a table an ingest_batch wrote ahead of the
+        # stream clock) would leave the old file looking current
+        mark_snapshot_stale(table_path)
+        write()
+        return None
+    return snapshot.write_through(spark, table_path, stamp_prices(clean, batch_id), write)
 
 
 def _start_etl(

@@ -1,11 +1,12 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from crypto_price_tracker_with_etl_dashboard_spark.session import get_spark
 from crypto_price_tracker_with_etl_dashboard_spark.schema import PRICES_SCHEMA

@@ -33,6 +33,28 @@ def test_degree_ccdf_monotone(spark):
     assert rows[0]["n_at_least"] == rows[0]["n_suppliers"]  # degree >= 1 always
 
 
+def test_degree_ccdf_on_empty_trade_matches_duckdb(spark, tmp_path):
+    """Zero-row lineitem and orders: no supplier, so every threshold
+    row is (t, 0, 0, NULL) on both engines, not an ANSI division by
+    zero on the Spark side."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from crypto_price_tracker_with_etl_dashboard_spark.queries.graph import (
+        _degree_ccdf_sql,
+        q_trade_degree_ccdf,
+    )
+
+    con = duckdb.connect()
+    for name in ("lineitem", "orders"):
+        schema = pq.read_schema(f"{SF_SMALL}/{name}.parquet")
+        pq.write_table(schema.empty_table(), tmp_path / f"{name}.parquet")
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{tmp_path}/{name}.parquet'")
+    got = [tuple(r) for r in q_trade_degree_ccdf(spark, str(tmp_path)).collect()]
+    want = con.execute(_degree_ccdf_sql()).fetchall()
+    assert got == want == [(t, 0, 0, None) for t in (1, 2, 5, 10, 20, 50, 100)]
+
+
 def test_prefix_clusters_shape(spark):
     from crypto_price_tracker_with_etl_dashboard_spark.queries.text import (
         q_doc_prefix_clusters,

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from crypto_price_tracker_with_etl_dashboard_spark.sources import (
     coingecko_rows_to_df,
     validate_and_normalize,
@@ -89,6 +91,33 @@ def test_same_second_polls_both_keep_their_rows(spark, tmp_path):
     stored = spark.read.parquet(table)
     assert stored.count() == 4
     assert stored.select("dt", "batch").distinct().count() == 1
+
+
+@pytest.mark.parametrize("local", [True, False])
+def test_same_second_polls_later_poll_wins(spark, tmp_path, monkeypatch, local):
+    """Two appends into one partition never share an event_id, and the
+    later poll's row is every symbol's latest (keep-last by arrival),
+    whatever row position each symbol had in either poll.  A table off
+    the local filesystem finds the partition's greatest event_id with
+    Spark instead of reading its files on the driver."""
+    from crypto_price_tracker_with_etl_dashboard_spark.api import PriceTracker
+    from crypto_price_tracker_with_etl_dashboard_spark.sources import ingest
+
+    if not local:
+        monkeypatch.setattr(ingest, "_local_root", lambda table_path: None)
+    table = str(tmp_path / "prices")
+    tr = PriceTracker(spark, table)
+    symbols = [f"c{i}" for i in range(9)]
+    ts = dt.datetime(2024, 1, 1, 12, 0, 0)
+    for poll, order in ((1, symbols), (2, symbols[::-1])):
+        tr.ingest_batch(
+            [{"symbol": s, "name": s, "current_price": float(poll)} for s in order],
+            batch_ts=ts,
+        )
+    stored = spark.read.parquet(table)
+    assert stored.select("event_id").distinct().count() == 18
+    latest = PriceTracker(spark, stored).latest().collect()
+    assert sorted((r["symbol"], r["current_price"]) for r in latest) == [(s, 2.0) for s in symbols]
 
 
 def test_replace_write_rewrites_its_own_partition(spark, tmp_path):
